@@ -112,8 +112,9 @@ def release_cache() -> None:
 # A streaming foreachBatch loop that re-constructs its anchored state
 # reads (folded index version, corpus versions, folded skip state)
 # every micro-batch pays that listing ~6x per batch even when the
-# compaction watermark has not moved (measured: ~1.5 s of the ~12 s
-# fixed per-batch overhead, scripts/profile_stream_batch.py).
+# compaction watermark has not moved (~1.5 s of the ~12 s fixed
+# per-batch overhead, measured with scripts/profile_stream_batch.py,
+# a script since removed).
 #
 # Soundness contract: callers key each entry on the inputs' VERSION —
 # the compaction-manifest version whose trees are write-once by the

@@ -768,7 +768,7 @@ def compact_lsh_index(
     root listing) and handed to the reader with ``basePath``, instead
     of ``spark.read.parquet(root)`` + a filter: the root read would
     file-list every leaf ever written (the O(stream-age) term
-    ``_read_prior_batches`` was rewritten to kill) and CRASHES with
+    ``StateLog.read`` exists to avoid) and CRASHES with
     'Unable to infer schema' when the root exists but the tail is
     empty (reachable after ``prune_deltas``). An empty tail is an
     early return: nothing to fold, no version written. Callers that

@@ -624,13 +624,13 @@ def _read_ivf_vectors(spark, path: str) -> DataFrame:
 # Centroid-sidecar memo (VERDICT r13 #1): a streaming ingest loop calls
 # load_ivf_index once per micro-batch against an anchor path that only
 # changes at fold/rebuild boundaries, and the sidecar collect is a
-# full Spark job (~1 s of the measured ~12 s fixed per-batch overhead,
-# scripts/profile_stream_batch.py). Reuse is gated on the sidecar
-# dir's file snapshot (name/mtime/length via the path's own Hadoop
-# FileSystem — the bloom sketch memo's discipline, operators/bloom.py):
-# index versions are write-once dirs, so an equal snapshot means equal
-# bytes, and an in-place rewrite changes mtimes and rebuilds. An
-# un-listable sidecar never reuses.
+# full Spark job (~1 s of the ~12 s fixed per-batch overhead, measured
+# with scripts/profile_stream_batch.py, a script since removed). Reuse
+# is gated on the sidecar dir's file snapshot (name/mtime/length via
+# the path's own Hadoop FileSystem — the bloom sketch memo's
+# discipline, operators/bloom.py): index versions are write-once dirs,
+# so an equal snapshot means equal bytes, and an in-place rewrite
+# changes mtimes and rebuilds. An un-listable sidecar never reuses.
 _CENTROID_MEMO: dict[str, tuple] = {}
 _CENTROID_MEMO_MAX = 32
 

@@ -1,5 +1,32 @@
 """Filesystem shim for the streaming state layer (manifests, per-batch
-delta/clean trees, version vacuum).
+delta/clean trees, version vacuum), and :class:`StateLog` — the one
+fold -> publish -> prune -> vacuum protocol every streaming wing's
+versioned state runs through.
+
+The protocol's rules, stated once (each wing's fold is a build body
+handed to :meth:`StateLog.fold`; its docstring points here):
+
+1. **Replay is a no-op.** A fold whose ``through_batch`` is at or
+   below the manifest watermark returns the manifest unchanged.
+2. **Publish after write.** Version ``k`` (``v{k}`` index dirs,
+   ``v=<k>`` partitions of a versions root) is written completely
+   before the manifest naming it is published atomically.
+3. **Orphan versions stay hidden.** A crash between the write and the
+   publish leaves an orphan version readers never see — they anchor on
+   the manifest, and partitioned version roots are read with a
+   ``v <= version`` filter — and the retried fold overwrites it.
+4. **Prune after publish.** Folded ``batch_id=N`` tail dirs are
+   deleted only once the manifest covering them is published, so every
+   row always has a reachable copy.
+5. **Vacuum watermark after deletes.** A vacuum walk writes its
+   watermark JSON after its deletes: a crash replays idempotent
+   deletes, never skips one.
+6. **Re-read after enumerating.** An anchored tail read re-reads the
+   manifest after enumerating the tail and retries (up to 5 times) if
+   the watermark moved — a concurrent fold + prune between the two
+   reads would otherwise silently drop the pruned batches' rows. A
+   prune landing after the read returns fails the caller's scan
+   loudly (missing files), never silently.
 
 Why this exists (VERDICT r9 "what's missing" #1): the streaming wings
 kept their small-state IO — compaction manifests, batch-dir listings,
@@ -36,8 +63,8 @@ Atomicity of ``write_text_atomic`` by backend:
   sub-millisecond window in which the manifest exists nowhere — a
   crash inside it durably loses the manifest; external readers on
   such a scheme combined with ``prune_deltas=True`` should prefer an
-  object-store root or accept the retry loop in
-  ``load_stream_ann_state`` (streaming/ann_stream.py).
+  object-store root or accept the anchored-read retry (rule 6
+  above).
 
 Disposition of the fallback window (VERDICT r10 next-round #5,
 adjudicated r11 — ACCEPTED, not patched): the window exists only for
@@ -65,7 +92,7 @@ import os
 import shutil
 import uuid
 
-__all__ = ["PosixFS", "HadoopFS", "state_fs", "path_scheme"]
+__all__ = ["PosixFS", "HadoopFS", "StateLog", "state_fs", "path_scheme"]
 
 # schemes where Hadoop rename is a real (metadata) rename; anything
 # else is treated as an object store where one PUT is the atomic unit
@@ -333,3 +360,106 @@ def batch_dirs(
         if after < bid < before:
             out.append((bid, f"{root}/{name}"))
     return [p for _, p in sorted(out)]
+
+
+def _watermark(manifest: dict | None) -> int:
+    return manifest["through_batch"] if manifest else -1
+
+
+class StateLog:
+    """One versioned state log: the manifest at ``{root}/{meta}/
+    manifest.json`` and the ``{root}/<tree>/batch_id=N`` tails it
+    folds, run through the protocol in the module docstring. Tree
+    names are relative to ``root``; ``meta`` holds the manifest and
+    the vacuum watermarks."""
+
+    def __init__(self, spark, root: str, meta: str = "_compaction"):
+        self.spark = spark
+        self.root = root
+        self.fs = state_fs(spark, root)
+        self.meta = f"{root}/{meta}"
+        self.manifest_path = f"{self.meta}/manifest.json"
+
+    def manifest(self) -> dict | None:
+        return read_json(self.fs, self.manifest_path)
+
+    def publish(self, manifest: dict) -> None:
+        write_json_atomic(self.fs, self.manifest_path, manifest)
+
+    def tail(self, tree: str, after: int, before: int) -> list[str]:
+        """The ``batch_id=N`` dirs of ``tree`` with ``after < N <
+        before`` (:func:`batch_dirs`)."""
+        return batch_dirs(self.fs, f"{self.root}/{tree}", after, before)
+
+    def read(self, tree: str, cols: list[str], dirs: list[str]):
+        """The enumerated ``dirs`` of ``tree`` as one DataFrame, with
+        ``batch_id`` kept as a column (``basePath``); None when empty.
+        Handing the reader explicit dirs keeps it from file-listing
+        every leaf the tree ever held — a per-batch cost that grows
+        with stream age (a compacted 80-batch sf1 series drifted 3.2
+        -> 4.5 s/batch from that listing alone)."""
+        if not dirs:
+            return None
+        return (
+            self.spark.read.option("basePath", f"{self.root}/{tree}")
+            .parquet(*dirs)
+            .select(*cols)
+        )
+
+    def anchored_tail(self, tree: str, before: int) -> tuple[dict | None, list[str]]:
+        """``(manifest, tail dirs above its watermark)``, consistent
+        with each other (rule 6)."""
+        for _ in range(5):
+            man = self.manifest()
+            dirs = self.tail(tree, _watermark(man), before)
+            if _watermark(self.manifest()) == _watermark(man):
+                return man, dirs
+        raise RuntimeError(
+            f"compaction watermark of {self.root} kept advancing across 5 "
+            "read attempts — a compactor is racing this reader"
+        )
+
+    def fold(self, through_batch: int, build, tails, prune=()) -> tuple[dict | None, bool]:
+        """One fold through ``through_batch``. ``build(manifest, k,
+        dirs)`` gets the current manifest (or None), the next version
+        number and ``{tree: tail dirs in (watermark, through_batch]}``
+        for each of ``tails``; it writes version ``k`` and returns the
+        manifest to publish, or None when there is nothing to fold.
+        After the publish the tails of the ``prune`` trees are deleted.
+        Returns ``(manifest, published)``."""
+        man = self.manifest()
+        prev = _watermark(man)
+        if through_batch <= prev:
+            return man, False
+        dirs = {t: self.tail(t, prev, through_batch + 1) for t in tails}
+        new = build(man, (man["version"] + 1) if man else 1, dirs)
+        if new is None:
+            return man, False
+        self.publish(new)
+        for tree in prune:
+            for d in dirs[tree]:
+                self.fs.delete_recursive(d)
+        return new, True
+
+    def vacuum(self, name: str, walks: dict) -> dict:
+        """The watermark walk behind ``{meta}/{name}``. ``walks`` maps
+        a watermark key to ``(last, drop)``: versions from the key's
+        value + 1 through ``last`` go to ``drop(j, watermark)`` in
+        order until it returns False (a version that must stay;
+        ``drop`` may record why in the watermark dict). The watermark
+        is written after the deletes, and only when it changed.
+        Returns it."""
+        path = f"{self.meta}/{name}"
+        old = read_json(self.fs, path) or {}
+        wm = dict(old)
+        for key, (last, drop) in walks.items():
+            through = wm.get(key, 0)
+            for j in range(through + 1, last + 1):
+                if not drop(j, wm):
+                    break
+                through = j
+            if through != wm.get(key, 0):
+                wm[key] = through
+        if wm != old:
+            write_json_atomic(self.fs, path, wm)
+        return wm

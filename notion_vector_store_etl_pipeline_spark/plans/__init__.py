@@ -58,7 +58,15 @@ def register(name: str, oracle: Optional[str] = None, doc: str = ""):
 # vintage first, then r4), recomputed each round from the
 # CORRECTNESS_r0*.json files.
 _PRIORITY = (
-    # (a) changed in round 14 (9): the chain family re-proves because
+    # (a) changed in round 15 or since (3): ngram_jaccard_selfjoin
+    # (the stop-shingle cap became one window pass), graph_reachability
+    # (BFS semi-joins large frontiers against distinct sources) and
+    # graph_pagerank (both caches primed in one action, whose node
+    # count is now selected by a branch tag rather than union order).
+    "ngram_jaccard_selfjoin",
+    "graph_reachability",
+    "graph_pagerank",
+    # (a') changed in round 14 (9): the chain family re-proves because
     # sequential_firstwins_pairs gained the empty-input short-circuit;
     # the minhash family because the signature base-hash projection and
     # the single-window dense-bucket candidate pass changed the operator
@@ -75,13 +83,13 @@ _PRIORITY = (
     "minhash_probe_stored_index",
     "knn_ivf_stored_index",
     "knn_ivf_incremental",
-    # (a') changed in the r14 OPTIMIZATION pass (3 more): the
+    # (a'') changed in the r14 OPTIMIZATION pass (3 more): the
     # connected-components convergence check moved to the label-sum
     # aggregate (neardup_components + its survivors rollup — the other
     # components consumers are already in-window), and
     # contamination_ngram_overlap's totals+hits fused into one pass.
     # The knn_ivf_*/neardup_*_ivf_* queries the same pass touched are
-    # already in windows (a)/(b) below.
+    # already in windows (a')/(b) below.
     "neardup_components",
     "neardup_cluster_survivors",
     "contamination_ngram_overlap",
@@ -128,13 +136,11 @@ _PRIORITY = (
     "incremental_changed",
     "interval_merge_islands",
     "join_full_outer_coalesce",
-    "kmeans_assign",
-    "kmeans_update",
-    "knn_filtered",
-    # (trimmed to keep the window at exactly 50 after the three (a')
-    # additions: knn_topk / lateral_top_item / levenshtein_neardup_titles
-    # move to the round-15 rotation head with the rest of the r11
-    # vintage)
+    # (trimmed to keep the window at exactly 50: knn_topk /
+    # lateral_top_item / levenshtein_neardup_titles left for the three
+    # r14 (a'') additions, and kmeans_assign / kmeans_update /
+    # knn_filtered for the three round-15 (a) names — all move to the
+    # next rotation's head with the rest of the r11 vintage)
 )
 
 _MODULES = (

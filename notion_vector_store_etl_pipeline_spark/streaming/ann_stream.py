@@ -18,21 +18,20 @@ instead, and the fold restores the partitioned layout for the
 standing index). With
 ``compact_every=K``, every K-th batch folds committed deltas into the
 next index version (:func:`operators.similarity.compact_ivf_index`)
-and publishes an atomic manifest; consumers anchor on the manifest and
-read only the delta TAIL, so probe-side state stays O(K deltas)
-regardless of stream age — the same bounded-growth discipline proven
-for the dedup stream (SCALE_SMOKE_R9.md §2), reusing its manifest
-machinery. The reference anchor is the same: the manifest is read once
-per run, not once per file (Notion_openai_vector_etl.py:625 vs the
-per-file loop :678-739).
+through a :class:`operators.statefs.StateLog` (its module docstring
+states the fold/publish/prune/vacuum rules); consumers anchor on the
+manifest and read only the delta TAIL, so probe-side state stays O(K
+deltas) regardless of stream age — the same bounded-growth discipline
+proven for the dedup stream (SCALE_SMOKE_R9.md §2). The reference
+anchor is the same: the manifest is read once per run, not once per
+file (Notion_openai_vector_etl.py:625 vs the per-file loop :678-739).
 
 Exactly-once: each batch's only artifact is its ``batch_id=N`` delta
 dir written with overwrite — a crash between the write and the epoch
 commit replays the batch and the rewrite is byte-idempotent. Unlike
 the dedup loop, per-batch work here reads NO other batch's artifacts,
-so there is no self-probe hazard to bound; compaction at batch N still
-folds through N-1 only (committed by construction) and re-triggering
-on replay is an idempotent no-op.
+so there is no self-probe hazard to bound; compaction at batch N
+folds through N-1 only (committed by construction).
 
 Soundness: assignment is per-vector and centroid-relative, and every
 delta (and every compacted version, whose sidecar is carried verbatim)
@@ -51,40 +50,49 @@ from pyspark.sql.streaming import StreamingQuery
 
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
     compact_ivf_index,
-    load_ivf_index,
     load_ivf_sidecar,
     load_ivf_index_with_deltas,
     quantize_and_assign,
     rebuild_ivf_index,
 )
-from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-    batch_dirs,
-    state_fs,
-)
+from notion_vector_store_etl_pipeline_spark.operators.statefs import StateLog
 from notion_vector_store_etl_pipeline_spark.sources.paginated import (
     register_paginated_source,
 )
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-    _write_manifest,
     read_compaction_manifest,
     vacuum_index_versions,
 )
 
 
-def _delta_dirs(
-    spark: SparkSession, out_dir: str, after_batch: int, before_batch: int
-) -> list[str]:
-    """Enumerate the ``delta/batch_id=N`` trees with ``after_batch < N <
-    before_batch`` via :func:`operators.statefs.batch_dirs` — with a
-    compaction watermark the dirs are constructed from the contiguous
-    epoch range and existence-checked (O(tail) point lookups, correct
-    on object-store roots); before any compaction, one root listing.
-    A recurring reader of a growing partitioned tree must select
-    partitions BEFORE any reader sees the root, or the listing becomes
-    the O(age) term."""
-    return batch_dirs(
-        state_fs(spark, out_dir), f"{out_dir}/delta", after_batch, before_batch
-    )
+def _ivf_anchor(spark: SparkSession, out_dir: str, base_index_path: str) -> str:
+    """The index version new deltas assign against: the manifest's
+    folded version, else the base."""
+    man = read_compaction_manifest(out_dir, spark)
+    return man["index_path"] if man else base_index_path
+
+
+def _recheck_ivf_anchor(
+    spark: SparkSession, out_dir: str, base_index_path: str, anchor: str, batch_id: int
+) -> None:
+    """Writer-side anchor re-validation (r10 review), run after a
+    batch's delta lands. An OUT-OF-BAND ``rebuild_centroids`` fold
+    racing the batch could publish a refreshed-sidecar version between
+    the batch's anchor read and its delta write — the delta's list_ids
+    would then sit ABOVE the new watermark but come from the OLD
+    centroids, and the next fold would make the inconsistency
+    permanent. Fail LOUDLY instead: the stream's restart replays the
+    batch from the checkpoint against the new anchor (every write is a
+    batch_id-keyed overwrite). In-process folds are sequential and
+    never race."""
+    now = _ivf_anchor(spark, out_dir, base_index_path)
+    if now != anchor:
+        raise RuntimeError(
+            f"ingest batch {batch_id}: IVF anchor changed {anchor!r} -> "
+            f"{now!r} during the batch (concurrent external rebuild) — "
+            "restart the stream to replay this batch against the current "
+            "sidecar"
+        )
 
 
 def load_stream_ann_state(
@@ -101,28 +109,12 @@ def load_stream_ann_state(
     Returns ``(vectors, cent_ids, cent_mat)`` like
     :func:`operators.similarity.load_ivf_index`.
 
-    Concurrent-compaction safety (ADVICE r9): a compactor that
-    publishes a new manifest and then PRUNES the folded deltas between
-    this function's manifest read and its delta enumeration would
-    silently drop those batches' vectors from the returned union. The
-    manifest is therefore re-read AFTER enumerating; if the watermark
-    advanced, the anchor is stale and the read retries against the new
-    version. A prune that lands after return, while the caller's probe
-    is still running, fails LOUDLY (the scan's file list no longer
-    exists) — never silently — so ``prune_deltas=True`` with external
+    Concurrent-compaction safety is the StateLog anchored read
+    (operators.statefs rule 6): ``prune_deltas=True`` with external
     concurrent probes trades retries/errors, not correctness."""
-    for _ in range(5):
-        man = read_compaction_manifest(out_dir, spark)
-        base = man["index_path"] if man else base_index_path
-        after = man["through_batch"] if man else -1
-        deltas = _delta_dirs(spark, out_dir, after, before_batch)
-        man2 = read_compaction_manifest(out_dir, spark)
-        if (man2 or {}).get("through_batch", -1) == after:
-            return load_ivf_index_with_deltas(spark, base, deltas)
-    raise RuntimeError(
-        f"load_stream_ann_state: compaction watermark of {out_dir} kept "
-        "advancing across 5 read attempts — a compactor is racing this "
-        "consumer faster than it can anchor"
+    man, deltas = StateLog(spark, out_dir).anchored_tail("delta", before_batch)
+    return load_ivf_index_with_deltas(
+        spark, man["index_path"] if man else base_index_path, deltas
     )
 
 
@@ -137,13 +129,10 @@ def compact_ann_stream_state(
     rebuild_sample_mod: int | None = None,
 ) -> dict | None:
     """Fold committed delta trees through ``through_batch`` into the
-    next stored-index version and publish the manifest. Idempotent: a
-    ``through_batch`` at or below the manifest watermark returns the
-    manifest unchanged (replay-safe), and a crash between the version
-    write and the publish leaves only an orphan version dir the retried
-    compaction overwrites. ``prune_deltas`` deletes the folded delta
-    dirs (their content lives in the new version; replays only touch
-    batches above the watermark), keeping the delta tree's listing
+    next stored-index version and publish the manifest — a
+    :meth:`operators.statefs.StateLog.fold` (replay, orphan-version
+    and prune rules in that module's docstring). ``prune_deltas``
+    deletes the folded delta dirs, keeping the delta tree's listing
     bounded by compact_every instead of stream age.
     ``retain_versions=N`` vacuums index versions superseded by more
     than N compactions after the publish (each version contains
@@ -158,38 +147,77 @@ def compact_ann_stream_state(
     under distribution shift (VERDICT r9 missing #2). A rebuilt
     version's sidecar DIFFERS from its predecessors', which is exactly
     the point; consumers always probe a version against its own
-    sidecar, so the swap is invisible to them. All small-state IO
-    routes through :mod:`operators.statefs` (object-store-safe)."""
-    fs = state_fs(spark, out_dir)
-    man = read_compaction_manifest(out_dir, spark)
-    prev = man["through_batch"] if man else -1
-    if through_batch <= prev:
-        return man
-    deltas = _delta_dirs(spark, out_dir, prev, through_batch + 1)
-    if not deltas and not rebuild_centroids:
-        return man
-    k = (man["version"] + 1) if man else 1
-    base = man["index_path"] if man else base_index_path
-    out_path = f"{out_dir}/index_versions/v{k}"
-    if rebuild_centroids:
-        rebuild_ivf_index(
-            spark, base, deltas, out_path, sample_mod=rebuild_sample_mod
-        )
-    else:
-        compact_ivf_index(spark, base, deltas, out_path)
-    manifest = {
-        "version": k,
-        "index_path": out_path,
-        "through_batch": through_batch,
-        "centroids": "refreshed" if rebuild_centroids else "carried",
-    }
-    _write_manifest(out_dir, manifest, spark)
-    if prune_deltas:
-        for d in deltas:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        vacuum_index_versions(spark, out_dir, k, retain_versions)
-    return manifest
+    sidecar, so the swap is invisible to them."""
+    return _fold_ann(
+        spark,
+        out_dir,
+        through_batch,
+        base_index_path,
+        prune_deltas,
+        retain_versions,
+        rebuild_centroids,
+        rebuild_sample_mod,
+    )[0]
+
+
+def _fold_ann(
+    spark: SparkSession,
+    out_dir: str,
+    through_batch: int,
+    base_index_path: str,
+    prune_deltas: bool,
+    retain_versions: int | None,
+    rebuild_centroids: bool,
+    rebuild_sample_mod: int | None,
+    reclaim=None,
+) -> tuple[dict | None, bool]:
+    """The one ann fold body (:func:`compact_ann_stream_state`).
+    ``reclaim(manifest)`` is the composed pipeline's event window. It
+    returns ``(dead, revived)``: the vec_ids to drop from the version,
+    or None when no stale event is pending (a pending one warrants a
+    fold even with no new deltas), and the revive events, whose
+    presence means revived vectors may have duplicate copies to
+    collapse. A reclaiming fold also records ``stale_through``.
+    Returns ``(manifest, published)``."""
+
+    def build(man, k, tails):
+        deltas = tails["delta"]
+        dead, revived = reclaim(man) if reclaim else (None, None)
+        if not deltas and not rebuild_centroids and dead is None:
+            return None
+        dedup_rows = revived is not None and not revived.isEmpty()
+        base = man["index_path"] if man else base_index_path
+        out_path = f"{out_dir}/index_versions/v{k}"
+        if rebuild_centroids:
+            rebuild_ivf_index(
+                spark,
+                base,
+                deltas,
+                out_path,
+                sample_mod=rebuild_sample_mod,
+                drop_vec_ids=dead,
+                dedup_rows=dedup_rows,
+            )
+        else:
+            compact_ivf_index(
+                spark, base, deltas, out_path, drop_vec_ids=dead, dedup_rows=dedup_rows
+            )
+        manifest = {
+            "version": k,
+            "index_path": out_path,
+            "through_batch": through_batch,
+            "centroids": "refreshed" if rebuild_centroids else "carried",
+        }
+        if reclaim:
+            manifest["stale_through"] = through_batch
+        return manifest
+
+    man, published = StateLog(spark, out_dir).fold(
+        through_batch, build, ("delta",), prune=("delta",) if prune_deltas else ()
+    )
+    if published and retain_versions is not None:
+        vacuum_index_versions(spark, out_dir, man["version"], retain_versions)
+    return man, published
 
 
 def probe_vector_batch(
@@ -396,12 +424,11 @@ def streaming_vector_ingest(
     def _process(batch: DataFrame, batch_id: int) -> None:
         # compaction boundary BEFORE the empty-batch return (an empty
         # K-th batch must still fold the tail; the fold is idempotent)
-        man = read_compaction_manifest(out_dir, spark)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             # fold through batch_id - 1: every earlier batch is
             # committed (this stream is processing batch_id), so the
             # watermark can never cover a crashed attempt's artifacts
-            man = compact_ann_stream_state(
+            compact_ann_stream_state(
                 spark,
                 out_dir,
                 through_batch=batch_id - 1,
@@ -415,7 +442,7 @@ def streaming_vector_ingest(
             )
         if batch.isEmpty():
             return
-        anchor = man["index_path"] if man else index_path
+        anchor = _ivf_anchor(spark, out_dir, index_path)
         # The sidecar MUST be re-read from the current anchor every
         # batch: a rebuild_centroids compaction publishes a version
         # whose sidecar deliberately DIFFERS (refreshed centroids).
@@ -484,25 +511,7 @@ def streaming_vector_ingest(
         delta.repartition("list_id").sortWithinPartitions("list_id").write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/delta/batch_id={batch_id}/vectors")
-        # Writer-side anchor re-validation (r10 review): an OUT-OF-BAND
-        # compact_ann_stream_state(rebuild_centroids=True) racing this
-        # batch could publish a refreshed-sidecar version between the
-        # manifest read above and the delta landing — the delta's
-        # list_ids would then sit ABOVE the new watermark but come
-        # from the OLD centroids, and the next fold would make the
-        # inconsistency permanent. Fail LOUDLY instead: the stream's
-        # restart replays this batch from the checkpoint against the
-        # new anchor (the overwrite is idempotent). In-process
-        # compactions (compact_every) are sequential and never race.
-        man2 = read_compaction_manifest(out_dir, spark)
-        anchor2 = man2["index_path"] if man2 else index_path
-        if anchor2 != anchor:
-            raise RuntimeError(
-                f"ann ingest batch {batch_id}: index anchor changed "
-                f"{anchor!r} -> {anchor2!r} during the batch (concurrent "
-                "external rebuild) — restart the stream to replay this "
-                "batch against the current sidecar"
-            )
+        _recheck_ivf_anchor(spark, out_dir, index_path, anchor, batch_id)
 
     stream = (
         spark.readStream.format("paginated")

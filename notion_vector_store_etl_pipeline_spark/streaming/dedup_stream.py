@@ -27,17 +27,17 @@ batch re-reads the ENTIRE clean/ and index_delta/ trees. With
 deltas into the next index version (:func:`operators.dedup
 .compact_lsh_index`) and the committed clean docs into an ADDITIVE
 corpus version dir (each doc is rewritten at most once, into exactly
-one version; the base corpus is never rewritten), then publishes an
-atomic manifest. Later batches anchor on the manifest and read only
-the ``(through_batch, current)`` tail of the delta/clean trees, so
-steady-state per-batch cost is O(batch + K) regardless of stream age
-— the reference reads its manifest once per RUN, not once per file
-(Notion_openai_vector_etl.py:625 vs the per-file loop :678-739); this
-is the same discipline with versioned, compacted state. Compaction at
-batch N folds through N-1 only: batches < N are committed (the stream
-is processing N), so a crash-replay of N can never find its own
-artifacts below the manifest watermark, preserving the replay
-soundness of the strict ``batch_id < N`` bound.
+one version; the base corpus is never rewritten), behind the
+manifest of a :class:`operators.statefs.StateLog` (whose module
+docstring states the fold/publish/prune/vacuum rules). Later batches
+anchor on the manifest and read only the ``(through_batch, current)``
+tail of the delta/clean trees, so steady-state per-batch cost is
+O(batch + K) regardless of stream age — the reference reads its
+manifest once per RUN, not once per file
+(Notion_openai_vector_etl.py:625 vs the per-file loop :678-739).
+Compaction at batch N folds through N-1 only: batches < N are
+committed (the stream is processing N), so a crash-replay of N can
+never find its own artifacts below the manifest watermark.
 
 Intra-batch near-dups (ADVICE r8): by default two near-dup docs that
 arrive in the SAME micro-batch are both clean — cross-batch dedup only,
@@ -73,10 +73,8 @@ from notion_vector_store_etl_pipeline_spark.operators.cache import (
     tracked_snapshot,
 )
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-    batch_dirs,
-    read_json,
+    StateLog,
     state_fs,
-    write_json_atomic,
 )
 from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     CHAIN_POLICIES,
@@ -98,45 +96,6 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
 from notion_vector_store_etl_pipeline_spark.sources.paginated import (
     register_paginated_source,
 )
-
-
-def _read_prior_batches(
-    spark: SparkSession,
-    path: str,
-    columns: list[str],
-    before_batch: int,
-    after_batch: int = -1,
-) -> DataFrame | None:
-    """Read a ``batch_id=N``-partitioned output dir, keeping only rows
-    from batches in ``(after_batch, before_batch)``. The strict upper
-    bound is what makes replays idempotent: a crash after this batch's
-    own artifacts were written but before the epoch commit replays the
-    batch, and without the bound the replay would find the crashed
-    attempt's own index delta / clean docs and probe the batch against
-    itself, flagging every doc as its own duplicate. The lower bound
-    excludes batches already folded into a compacted version (the
-    manifest's ``through_batch``) so the tail read stays O(batches
-    since last compaction), not O(stream age).
-
-    The matching dirs are enumerated HERE and passed to the reader
-    explicitly (with ``basePath`` so ``batch_id`` stays a column):
-    ``spark.read.parquet(root)`` would bound the data via partition
-    pruning but still FILE-LIST every ``batch_id=`` leaf ever written
-    — a per-batch cost that grows with stream age (measured: the
-    compacted 80-batch sf1 series drifted 3.2 -> 4.5 s/batch from
-    listing alone, after compaction had already bounded the data
-    read). Enumeration goes through :mod:`operators.statefs`: with a
-    compaction watermark the tail dirs are CONSTRUCTED from the
-    contiguous epoch range and existence-checked (O(tail) point
-    lookups — no listing at all, and correct on object-store roots
-    where ``os.listdir`` would silently see nothing, VERDICT r9 #1);
-    before any compaction, one root listing."""
-    dirs = batch_dirs(
-        state_fs(spark, path), path, after_batch, before_batch
-    )
-    if not dirs:
-        return None
-    return spark.read.option("basePath", path).parquet(*dirs).select(*columns)
 
 
 def _latest_per_doc(tail: DataFrame) -> DataFrame:
@@ -339,10 +298,6 @@ def probe_batch(
     return flagged, clean
 
 
-def _manifest_path(out_dir: str) -> str:
-    return f"{out_dir}/_compaction/manifest.json"
-
-
 def read_compaction_manifest(out_dir: str, spark: SparkSession | None = None) -> dict | None:
     """The stream's compaction watermark: ``{"version": k, "index_path"
     or "index_table": ..., "corpus_base": ..., "through_batch": N}``
@@ -354,13 +309,7 @@ def read_compaction_manifest(out_dir: str, spark: SparkSession | None = None) ->
     publishes. IO routes through :mod:`operators.statefs` — a scheme'd
     ``out_dir`` (``s3a://…``) needs ``spark`` and fails loudly without
     it; plain local paths work as before."""
-    return read_json(state_fs(spark, out_dir), _manifest_path(out_dir))
-
-
-def _write_manifest(
-    out_dir: str, manifest: dict, spark: SparkSession | None = None
-) -> None:
-    write_json_atomic(state_fs(spark, out_dir), _manifest_path(out_dir), manifest)
+    return StateLog(spark, out_dir).manifest()
 
 
 def latest_committed_batch(
@@ -451,11 +400,9 @@ def compact_stream_state(
 ) -> dict | None:
     """Fold the stream's committed per-batch state through
     ``through_batch`` into the next compacted version and publish the
-    manifest. Idempotent: if the manifest already covers
-    ``through_batch`` it is returned unchanged (so a crash-replay that
-    re-triggers compaction is a no-op), and a crash between the version
-    writes and the manifest publish leaves only an orphan version dir
-    that the retried compaction overwrites.
+    manifest — a :meth:`operators.statefs.StateLog.fold`, whose module
+    docstring states the replay, orphan-version, prune and vacuum rules
+    this build body relies on.
 
     - index: ``compact_lsh_index`` over the current anchor (manifest
       version if any, else the base index) + the delta tail
@@ -477,18 +424,14 @@ def compact_stream_state(
       flat — the partition layout is what makes compaction actually
       pay (SCALE_SMOKE_R9.md §2).
     - ``prune_deltas=True`` additionally DELETES the folded
-      ``index_delta/batch_id<=through`` dirs: their content lives in
-      the compacted index version, replays can only touch batches
-      above the watermark, and removing them keeps the delta tree's
+      ``index_delta/batch_id<=through`` dirs, keeping the delta tree's
       directory listing bounded by compact_every instead of stream
       age. (``clean/`` is never pruned — it is the stream's OUTPUT,
       owned by downstream consumers.)
     - ``retain_versions=N`` (N >= 1) vacuums superseded INDEX versions
-      after the publish: versions ``<= k - N`` — their dirs and, when
-      bucketed, their ``{bucketed_table}_v{j}`` catalog entries — are
-      deleted. Only versions strictly below the just-published
-      manifest are ever touched, so a crash mid-vacuum loses nothing a
-      reader can reach. Corpus versions are never vacuumed by MINOR
+      after a minor fold's publish: versions ``<= k - N`` — their dirs
+      and, when bucketed, their ``{bucketed_table}_v{j}`` catalog
+      entries (:func:`vacuum_index_versions`). Corpus versions are never vacuumed by MINOR
       folds: each ``corpus_versions/v=<j>`` partition holds DISTINCT
       folded docs (additive state, live except superseded rows), unlike
       index versions where each supersedes all before it — only a
@@ -526,256 +469,227 @@ def compact_stream_state(
     ``through_batch`` must only cover committed batches — pass
     :func:`latest_committed_batch` (or ``current_batch - 1`` from
     inside ``foreachBatch``, where every earlier batch is committed).
-
-    All small-state IO (manifest, dir enumeration, prune, vacuum)
-    routes through :mod:`operators.statefs`, so a scheme'd ``out_dir``
-    works — or fails loudly — instead of silently seeing no state.
     """
-    fs = state_fs(spark, out_dir)
-    man = read_compaction_manifest(out_dir, spark)
-    prev_through = man["through_batch"] if man else -1
-    if through_batch <= prev_through:
-        return man
-    delta_dirs = batch_dirs(
-        fs, f"{out_dir}/index_delta", prev_through, through_batch + 1
-    )
-    if not delta_dirs and not major:
-        # nothing committed in the window (empty batches write no
-        # artifacts) — folding would be a no-op and the delta read
-        # would have no schema to infer (ADVICE r9 #2). A MAJOR fold
-        # proceeds regardless: its job is the rewrite, not the window.
-        return man
-    pending = (man or {}).get("pending_vacuum_floor")
-    if pending:
-        # the previous MAJOR fold published its floor but deferred the
-        # physical below-floor deletes one fold cycle (ADVICE r11): an
-        # out-of-process reader mid-query on the prior anchor kept a
-        # read margin until now — this call IS the next fold. Index
-        # versions first: a crash between the two deletes leaves
-        # corpus-without-index (harmless), never an index whose sids
-        # have no verify text. The flag clears with this fold's own
-        # manifest publish; a crash before that replays idempotent
-        # deletes, never skips one.
-        vacuum_index_versions(
-            spark,
-            out_dir,
-            man["version"],
-            man["version"] - pending + 1,
-            bucketed_table=bucketed_table,
-        )
-        vacuum_retired_corpus(spark, out_dir, pending)
-    if (
-        not major
-        and auto_major_rows is not None
-        and (man or {}).get("superseded_rows", 0) >= auto_major_rows
-    ):
-        # size-triggered MAJOR upgrade (VERDICT r11 #5): the superseded
-        # sidecar grows with distinct UPDATED docs between majors, and a
-        # batch-count cadence (compact_major_every) cannot see a
-        # hot-update workload outgrowing it. The manifest's cumulative
-        # superseded-row count is the trigger: past the threshold this
-        # fold rewrites and resets it, bounding the sidecar (and the
-        # broadcast set every corpus read ships) by the threshold, not
-        # by luck of the cadence.
-        major = True
-    # the manifest records the stream's signature params (whoever folds
-    # first is authoritative — the wing passes its own); a MAJOR fold
-    # validates against them before rebuilding, because a mismatched
-    # rebuild (checkable swaps the bucket hash; num_hashes/bands change
-    # every bucket value) would produce an index whose buckets match NO
-    # probe signature — every near-dup of a folded doc silently sails
-    # through (r11b review #2)
-    signature = (man or {}).get("signature") or [num_hashes, bands, checkable]
-    if major and man and "signature" not in man and not assume_signature:
-        # pre-signature manifest (ADVICE r11): the fallback above adopts
-        # the CALLER's params, so a mismatched rebuild on an upgraded
-        # stream would not be caught — and a rebuild under wrong params
-        # yields an index no probe signature can hit (silent dedup
-        # loss). Sanity-probe before trusting them: sampled folded docs
-        # must reproduce at least one of their recorded index buckets
-        # under the caller's params.
-        _check_signature_by_probe(
-            spark, man, out_dir, num_hashes, bands, checkable
-        )
-    if major and signature != [num_hashes, bands, checkable]:
-        raise ValueError(
-            f"major fold called with signature params (num_hashes, bands, "
-            f"checkable) = {[num_hashes, bands, checkable]} but the "
-            f"manifest records {signature} — a rebuild under different "
-            "params yields an index no probe signature can hit; pass the "
-            "stream's own params"
-        )
-    k = (man["version"] + 1) if man else 1
-    idx_out = f"{out_dir}/index_versions/v{k}"
-    tbl = f"{bucketed_table}_v{k}" if bucketed_table else None
-    cur_table = man.get("index_table") if man else base_index_table
-    cur_path = man.get("index_path") if man else base_index_path
-    if major:
+    log = StateLog(spark, out_dir)
+
+    def build(man, k, tails):
+        nonlocal major
+        if not tails["index_delta"] and not major:
+            # nothing committed in the window (empty batches write no
+            # artifacts) — folding would be a no-op and the delta read
+            # would have no schema to infer (ADVICE r9 #2). A MAJOR fold
+            # proceeds regardless: its job is the rewrite, not the window.
+            return None
+        pending = (man or {}).get("pending_vacuum_floor")
+        if pending:
+            # the previous MAJOR fold published its floor but deferred the
+            # physical below-floor deletes one fold cycle (ADVICE r11): an
+            # out-of-process reader mid-query on the prior anchor kept a
+            # read margin until now — this call IS the next fold. Index
+            # versions first: a crash between the two deletes leaves
+            # corpus-without-index (harmless), never an index whose sids
+            # have no verify text. The flag clears with this fold's own
+            # manifest publish; a crash before that replays idempotent
+            # deletes, never skips one.
+            vacuum_index_versions(
+                spark,
+                out_dir,
+                man["version"],
+                man["version"] - pending + 1,
+                bucketed_table=bucketed_table,
+            )
+            vacuum_retired_corpus(spark, out_dir, pending)
+        if (
+            not major
+            and auto_major_rows is not None
+            and (man or {}).get("superseded_rows", 0) >= auto_major_rows
+        ):
+            # size-triggered MAJOR upgrade (VERDICT r11 #5): the superseded
+            # sidecar grows with distinct UPDATED docs between majors, and a
+            # batch-count cadence (compact_major_every) cannot see a
+            # hot-update workload outgrowing it. The manifest's cumulative
+            # superseded-row count is the trigger: past the threshold this
+            # fold rewrites and resets it, bounding the sidecar (and the
+            # broadcast set every corpus read ships) by the threshold, not
+            # by luck of the cadence.
+            major = True
+        # the manifest records the stream's signature params (whoever folds
+        # first is authoritative — the wing passes its own); a MAJOR fold
+        # validates against them before rebuilding, because a mismatched
+        # rebuild (checkable swaps the bucket hash; num_hashes/bands change
+        # every bucket value) would produce an index whose buckets match NO
+        # probe signature — every near-dup of a folded doc silently sails
+        # through (r11b review #2)
+        signature = (man or {}).get("signature") or [num_hashes, bands, checkable]
+        if major and man and "signature" not in man and not assume_signature:
+            # pre-signature manifest (ADVICE r11): the fallback above adopts
+            # the CALLER's params, so a mismatched rebuild on an upgraded
+            # stream would not be caught — and a rebuild under wrong params
+            # yields an index no probe signature can hit (silent dedup
+            # loss). Sanity-probe before trusting them: sampled folded docs
+            # must reproduce at least one of their recorded index buckets
+            # under the caller's params.
+            _check_signature_by_probe(
+                spark, man, out_dir, num_hashes, bands, checkable
+            )
+        if major and signature != [num_hashes, bands, checkable]:
+            raise ValueError(
+                f"major fold called with signature params (num_hashes, bands, "
+                f"checkable) = {[num_hashes, bands, checkable]} but the "
+                f"manifest records {signature} — a rebuild under different "
+                "params yields an index no probe signature can hit; pass the "
+                "stream's own params"
+            )
+        idx_out = f"{out_dir}/index_versions/v{k}"
+        tbl = f"{bucketed_table}_v{k}" if bucketed_table else None
         prev_man = man or {"version": 0, "corpus_base": base_corpus_path}
-        # self-healing resolve (ADVICE r11): corpus versions written
-        # before the superseded sidecar existed can hold cross-version
-        # duplicate texts with NO sidecar entry — the anchor read alone
-        # would pass both texts through, and this rewrite would bake
-        # both (plus the retired text's LSH buckets) into the floor
-        # version permanently. Resolve per doc by highest precedence
-        # rank (base = 0, version = its v) directly; for post-sidecar
-        # state this is a no-op on top of the sidecar filter.
-        cur = (
-            _load_anchor_corpus(spark, prev_man, out_dir, with_rank=True)
-            .groupBy("doc_id")
-            .agg(F.max(F.struct(F.col("_rank"), F.col("text")))["text"].alias("text"))
-        )
-        window = _read_prior_batches(
-            spark,
-            f"{out_dir}/clean",
-            ["doc_id", "text", "batch_id"],
-            before_batch=through_batch + 1,
-            after_batch=prev_through,
-        )
-        if window is not None:
-            cur = _merge_latest_tail(cur, window)
-        # one materialization feeds the corpus rewrite AND the index
-        # rebuild (the signature pass would otherwise replay the whole
-        # resolve-union per consumer)
-        cur = cur.persist()
-        try:
-            cur.write.mode("overwrite").parquet(
-                f"{out_dir}/corpus_versions/v={k}"
-            )
-            idx = build_lsh_index(
-                cur,
-                num_hashes=num_hashes,
-                bands=bands,
-                checkable=checkable,
-                dense_bucket_cap=dense_bucket_cap,
-                keep=keep,
-            )
-            if tbl:
-                write_lsh_index_bucketed(idx, tbl, n_buckets, path=idx_out)
-            else:
-                write_lsh_index(idx, idx_out)
-        finally:
-            cur.unpersist()
+        window = log.read("clean", ["doc_id", "text", "batch_id"], tails["clean"])
         manifest = {
             "version": k,
             "index_path": None if tbl else idx_out,
             "index_table": tbl,
-            "corpus_base": man["corpus_base"] if man else base_corpus_path,
+            "corpus_base": prev_man["corpus_base"],
             "through_batch": through_batch,
-            "corpus_floor": k,
-            "signature": signature,
-            # physical below-floor deletes are DEFERRED one fold cycle
-            # (ADVICE r11): the floor is published now — readers anchor
-            # on v=k — but an out-of-process reader mid-query on the
-            # previous anchor keeps a read margin until the next fold
-            # call processes this flag (top of this function). Below-
-            # floor index versions still vacuum unconditionally THEN
-            # (epoch boundary, not a rollback-margin point — r11b
-            # review #3); during the grace cycle their corpus is intact
-            # so rolling back to them stays sound.
-            "pending_vacuum_floor": k,
         }
-        _write_manifest(out_dir, manifest, spark)
-        if prune_deltas:
-            for d in delta_dirs:
-                fs.delete_recursive(d)
-        return manifest
-    compact_lsh_index(
-        spark,
-        base_path=None if cur_table else cur_path,
-        delta_dir=f"{out_dir}/index_delta",
-        out_path=idx_out,
-        dense_bucket_cap=dense_bucket_cap,
-        keep=keep,
-        after_batch=prev_through,
-        through_batch=through_batch,
-        bucketed_table=tbl,
-        n_buckets=n_buckets,
-        base_table=cur_table,
-        delta_dirs=delta_dirs,
-    )
-    n_sup = 0
-    folded = _read_prior_batches(
-        spark,
-        f"{out_dir}/clean",
-        ["doc_id", "text", "batch_id"],
-        before_batch=through_batch + 1,
-        after_batch=prev_through,
-    )
-    if folded is not None:
-        # collapse to the LATEST text per doc within the window: the
-        # composed pipeline's clean tree holds one row per (re)process,
-        # so an updated doc would otherwise land in corpus_versions
-        # with BOTH texts and every later probe's verify universe would
-        # carry the sid twice — fanning candidate pairs across old/new
-        # text and flagging new docs against RETIRED content (r11
-        # review). For the wing's own feed (re-sends, same text) the
-        # collapse is a plain dedup.
-        _latest_per_doc(folded).write.mode("overwrite").parquet(
-            f"{out_dir}/corpus_versions/v={k}"
-        )
-        # superseded sidecar (r11b — closes the cross-WINDOW residual):
-        # a doc folded into v=k that already exists at a lower
-        # precedence (the base corpus or an earlier version) keeps its
-        # RETIRED text in that immutable earlier copy; record its id so
-        # `_load_anchor_corpus` resolves latest-wins at read time and
-        # the verify universe never carries two texts for one sid
-        # (before this, a new doc near-dup of the retired text could be
-        # flagged against content the corpus no longer serves). Cost:
-        # one doc_id-pruned corpus scan per FOLD (broadcast semi
-        # against the window's ids — window is K batches, bounded);
-        # the read side broadcasts the cumulative superseded id set,
-        # which grows with distinct UPDATED docs, not stream age — a
-        # full rewrite fold collapsing all versions is the escape hatch
-        # if churn ever makes it large, named future work. The retired
-        # text's LSH buckets stay in the index versions: candidates
-        # they generate now verify against the doc's CURRENT text only,
-        # so they cost verify work, never a wrong flag.
-        prev_man = man or {"version": 0, "corpus_base": base_corpus_path}
-        window_ids = F.broadcast(
-            spark.read.parquet(f"{out_dir}/corpus_versions/v={k}").select("doc_id")
-        )
-        sup = (
-            _load_anchor_corpus(spark, prev_man, out_dir)
-            .select("doc_id")
-            .join(window_ids, "doc_id", "left_semi")
-            .dropDuplicates()
-            .persist()
-        )
-        try:
-            n_sup = sup.count()
-            if n_sup > 0:
-                sup.write.mode("overwrite").parquet(
-                    f"{out_dir}/superseded_versions/v={k}"
+        if major:
+            # self-healing resolve (ADVICE r11): corpus versions written
+            # before the superseded sidecar existed can hold cross-version
+            # duplicate texts with NO sidecar entry — the anchor read alone
+            # would pass both texts through, and this rewrite would bake
+            # both (plus the retired text's LSH buckets) into the floor
+            # version permanently. Resolve per doc by highest precedence
+            # rank (base = 0, version = its v) directly; for post-sidecar
+            # state this is a no-op on top of the sidecar filter.
+            cur = (
+                _load_anchor_corpus(spark, prev_man, out_dir, with_rank=True)
+                .groupBy("doc_id")
+                .agg(F.max(F.struct(F.col("_rank"), F.col("text")))["text"].alias("text"))
+            )
+            if window is not None:
+                cur = _merge_latest_tail(cur, window)
+            # one materialization feeds the corpus rewrite AND the index
+            # rebuild (the signature pass would otherwise replay the whole
+            # resolve-union per consumer)
+            cur = cur.persist()
+            try:
+                cur.write.mode("overwrite").parquet(
+                    f"{out_dir}/corpus_versions/v={k}"
                 )
-        finally:
-            sup.unpersist()
-    manifest = {
-        "version": k,
-        "index_path": None if tbl else idx_out,
-        "index_table": tbl,
-        "corpus_base": man["corpus_base"] if man else base_corpus_path,
-        "through_batch": through_batch,
-        # a prior MAJOR fold's floor survives minor folds unchanged
-        "corpus_floor": (man or {}).get("corpus_floor", 0),
-        # recorded for major-fold validation; an existing record wins
-        # (minor folds never recompute signatures, so their own args
-        # must not overwrite the stream's)
-        "signature": signature,
-        # cumulative sidecar rows since the last MAJOR fold — the
-        # size trigger auto_major_rows reads (majors reset it by
-        # publishing a manifest without the key)
-        "superseded_rows": (man or {}).get("superseded_rows", 0) + n_sup,
-    }
-    _write_manifest(out_dir, manifest, spark)
-    if prune_deltas:
-        for d in delta_dirs:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        vacuum_index_versions(
-            spark, out_dir, k, retain_versions, bucketed_table=bucketed_table
+                idx = build_lsh_index(
+                    cur,
+                    num_hashes=num_hashes,
+                    bands=bands,
+                    checkable=checkable,
+                    dense_bucket_cap=dense_bucket_cap,
+                    keep=keep,
+                )
+                if tbl:
+                    write_lsh_index_bucketed(idx, tbl, n_buckets, path=idx_out)
+                else:
+                    write_lsh_index(idx, idx_out)
+            finally:
+                cur.unpersist()
+            manifest.update(
+                corpus_floor=k,
+                signature=signature,
+                # physical below-floor deletes are DEFERRED one fold cycle
+                # (ADVICE r11): the floor is published now — readers anchor
+                # on v=k — but an out-of-process reader mid-query on the
+                # previous anchor keeps a read margin until the next fold
+                # call processes this flag (top of this build). Below-
+                # floor index versions still vacuum unconditionally THEN
+                # (epoch boundary, not a rollback-margin point — r11b
+                # review #3); during the grace cycle their corpus is intact
+                # so rolling back to them stays sound.
+                pending_vacuum_floor=k,
+            )
+            return manifest
+        cur_table = man.get("index_table") if man else base_index_table
+        compact_lsh_index(
+            spark,
+            base_path=None if cur_table else (man.get("index_path") if man else base_index_path),
+            delta_dir=f"{out_dir}/index_delta",
+            out_path=idx_out,
+            dense_bucket_cap=dense_bucket_cap,
+            keep=keep,
+            bucketed_table=tbl,
+            n_buckets=n_buckets,
+            base_table=cur_table,
+            delta_dirs=tails["index_delta"],
         )
-    return manifest
+        n_sup = 0
+        if window is not None:
+            # collapse to the LATEST text per doc within the window: the
+            # composed pipeline's clean tree holds one row per (re)process,
+            # so an updated doc would otherwise land in corpus_versions
+            # with BOTH texts and every later probe's verify universe would
+            # carry the sid twice — fanning candidate pairs across old/new
+            # text and flagging new docs against RETIRED content (r11
+            # review). For the wing's own feed (re-sends, same text) the
+            # collapse is a plain dedup.
+            _latest_per_doc(window).write.mode("overwrite").parquet(
+                f"{out_dir}/corpus_versions/v={k}"
+            )
+            # superseded sidecar (r11b — closes the cross-WINDOW residual):
+            # a doc folded into v=k that already exists at a lower
+            # precedence (the base corpus or an earlier version) keeps its
+            # RETIRED text in that immutable earlier copy; record its id so
+            # `_load_anchor_corpus` resolves latest-wins at read time and
+            # the verify universe never carries two texts for one sid
+            # (before this, a new doc near-dup of the retired text could be
+            # flagged against content the corpus no longer serves). Cost:
+            # one doc_id-pruned corpus scan per FOLD (broadcast semi
+            # against the window's ids — window is K batches, bounded);
+            # the read side broadcasts the cumulative superseded id set,
+            # which grows with distinct UPDATED docs, not stream age — a
+            # full rewrite fold collapsing all versions is the escape hatch
+            # if churn ever makes it large, named future work. The retired
+            # text's LSH buckets stay in the index versions: candidates
+            # they generate now verify against the doc's CURRENT text only,
+            # so they cost verify work, never a wrong flag.
+            window_ids = F.broadcast(
+                spark.read.parquet(f"{out_dir}/corpus_versions/v={k}").select("doc_id")
+            )
+            sup = (
+                _load_anchor_corpus(spark, prev_man, out_dir)
+                .select("doc_id")
+                .join(window_ids, "doc_id", "left_semi")
+                .dropDuplicates()
+                .persist()
+            )
+            try:
+                n_sup = sup.count()
+                if n_sup > 0:
+                    sup.write.mode("overwrite").parquet(
+                        f"{out_dir}/superseded_versions/v={k}"
+                    )
+            finally:
+                sup.unpersist()
+        manifest.update(
+            # a prior MAJOR fold's floor survives minor folds unchanged
+            corpus_floor=(man or {}).get("corpus_floor", 0),
+            # recorded for major-fold validation; an existing record wins
+            # (minor folds never recompute signatures, so their own args
+            # must not overwrite the stream's)
+            signature=signature,
+            # cumulative sidecar rows since the last MAJOR fold — the
+            # size trigger auto_major_rows reads (majors reset it by
+            # publishing a manifest without the key)
+            superseded_rows=(man or {}).get("superseded_rows", 0) + n_sup,
+        )
+        return manifest
+
+    man, published = log.fold(
+        through_batch,
+        build,
+        ("index_delta", "clean"),
+        prune=("index_delta",) if prune_deltas else (),
+    )
+    if published and not major and retain_versions is not None:
+        vacuum_index_versions(
+            spark, out_dir, man["version"], retain_versions, bucketed_table=bucketed_table
+        )
+    return man
 
 
 def vacuum_index_versions(
@@ -796,22 +710,19 @@ def vacuum_index_versions(
     already-published manifest are touched, and re-running is an
     idempotent no-op. Returns the vacuumed version numbers.
 
-    A ``_compaction/vacuum.json`` watermark records the highest
-    version already vacuumed, so each call probes only the versions
-    ADDED since the last vacuum — without it every compaction would
-    re-issue exists()/DROP TABLE for every version ever retired, an
-    O(stream-age) per-compaction cost (~3k object-store probes a month
-    into a compact_every=10, 1k-batches/day stream). The watermark is
-    written AFTER the deletions: a crash between them replays a few
-    idempotent deletes on the next call, never skips one."""
+    The walk is :meth:`operators.statefs.StateLog.vacuum` behind a
+    ``_compaction/vacuum.json`` watermark (``vacuumed_through``), so
+    each call probes only the versions ADDED since the last vacuum —
+    without it every compaction would re-issue exists()/DROP TABLE for
+    every version ever retired, an O(stream-age) per-compaction cost
+    (~3k object-store probes a month into a compact_every=10,
+    1k-batches/day stream)."""
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1 (the live version)")
     fs = state_fs(spark, out_dir)
-    wm_path = f"{out_dir}/_compaction/vacuum.json"
-    start = ((read_json(fs, wm_path) or {}).get("vacuumed_through", 0)) + 1
-    cut = current_version - retain_versions
     gone = []
-    for j in range(start, cut + 1):
+
+    def drop(j, _wm):
         vdir = f"{out_dir}/index_versions/v{j}"
         found = fs.exists(vdir)
         if bucketed_table is not None:
@@ -819,8 +730,11 @@ def vacuum_index_versions(
         if found:
             fs.delete_recursive(vdir)
             gone.append(j)
-    if cut >= start:
-        write_json_atomic(fs, wm_path, {"vacuumed_through": cut})
+        return True
+
+    StateLog(spark, out_dir).vacuum(
+        "vacuum.json", {"vacuumed_through": (current_version - retain_versions, drop)}
+    )
     return gone
 
 
@@ -974,6 +888,49 @@ def _load_anchor_corpus_uncached(
     )
 
 
+def _load_lsh_anchor(
+    spark: SparkSession,
+    out_dir: str,
+    anchor: dict,
+    before_batch: int,
+    with_tail: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """An LSH ingest batch's probe side: the ``anchor`` manifest's
+    index and corpus (folded version, or the base) and, ``with_tail``,
+    the uncompacted tail strictly below ``before_batch`` — delta
+    buckets unioned into the index, clean docs merged into the corpus
+    at their per-doc LATEST text. A doc re-sent with CHANGED text
+    (same-id exclusion passes it through as clean) would otherwise sit
+    in the verify universe with both texts, and a new near-dup of the
+    RETIRED text could flag against content the corpus no longer
+    serves; a doc edited across FOLD windows is resolved one level
+    down, by the superseded sidecar :func:`_load_anchor_corpus` reads.
+    The strict upper bound keeps replays idempotent: a batch replayed
+    after its own artifacts were written must not probe against
+    itself and flag every doc as its own duplicate. Returns ``(index,
+    docs)``."""
+    index = _load_anchor_index(spark, anchor)
+    docs = _load_anchor_corpus(spark, anchor, out_dir)
+    if with_tail:
+        log = StateLog(spark, out_dir)
+        after = anchor["through_batch"]
+        deltas = log.read(
+            "index_delta",
+            ["sid", "band", "bucket"],
+            log.tail("index_delta", after, before_batch),
+        )
+        if deltas is not None:
+            index = index.unionByName(deltas)
+        clean = log.read(
+            "clean",
+            ["doc_id", "text", "batch_id"],
+            log.tail("clean", after, before_batch),
+        )
+        if clean is not None:
+            docs = _merge_latest_tail(docs, clean)
+    return index, docs
+
+
 def streaming_dedup_ingest(
     spark: SparkSession,
     source_path: str,
@@ -1078,36 +1035,9 @@ def streaming_dedup_ingest(
             )
         if batch.isEmpty():
             return
-        anchor = man or base_manifest
-        index = _load_anchor_index(spark, anchor)
-        docs = _load_anchor_corpus(spark, anchor, out_dir)
-        after = anchor["through_batch"]
-        if update_index:
-            deltas = _read_prior_batches(
-                spark,
-                f"{out_dir}/index_delta",
-                ["sid", "band", "bucket"],
-                batch_id,
-                after,
-            )
-            if deltas is not None:
-                index = index.unionByName(deltas)
-            prior_clean = _read_prior_batches(
-                spark,
-                f"{out_dir}/clean",
-                ["doc_id", "text", "batch_id"],
-                batch_id,
-                after,
-            )
-            if prior_clean is not None:
-                # per-doc LATEST text in the tail, current text winning
-                # over base/folded copies (the flagship's shape): a doc
-                # re-sent with CHANGED text (same-id exclusion passes
-                # it through as clean) would otherwise sit in the
-                # verify universe with both texts, and a new near-dup
-                # of the RETIRED text could flag against content the
-                # corpus no longer serves.
-                docs = _merge_latest_tail(docs, prior_clean)
+        index, docs = _load_lsh_anchor(
+            spark, out_dir, man or base_manifest, batch_id, update_index
+        )
         probed = probe_batch(
             batch,
             docs,

@@ -74,46 +74,39 @@ retires the consumed events behind the manifest's ``stale_through``
 watermark, so the serve-time subtraction list is bounded by the fold
 cadence, not the corpus's lifetime update count.
 
-State IO routes through :mod:`operators.statefs` (object-store-safe).
-Stream == batch-twin parity is pinned in tests/test_ingest_pipeline.py;
-the revert/reclaim lifecycle in tests/test_ingest_pipeline_r11.py.
+Every fold here (skip state, ann) is a
+:class:`operators.statefs.StateLog` fold, whose module docstring
+states the fold/publish/prune/vacuum rules; all state IO routes
+through that module (object-store-safe). Stream == batch-twin parity
+is pinned in tests/test_ingest_pipeline.py; the revert/reclaim
+lifecycle in tests/test_ingest_pipeline_r11.py.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from notion_vector_store_etl_pipeline_spark.functions import vectors as V
-from notion_vector_store_etl_pipeline_spark.operators.dedup import (
-    load_lsh_index,
-    load_lsh_index_bucketed,
-)
+from notion_vector_store_etl_pipeline_spark.operators.dedup import load_lsh_index
 from notion_vector_store_etl_pipeline_spark.operators.similarity import (
-    compact_ivf_index,
-    load_ivf_index,
     load_ivf_sidecar,
     quantize_and_assign,
-    rebuild_ivf_index,
 )
 from notion_vector_store_etl_pipeline_spark.operators.cache import memo_df
-from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-    read_json,
-    state_fs,
-    write_json_atomic,
-)
+from notion_vector_store_etl_pipeline_spark.operators.statefs import StateLog
 from notion_vector_store_etl_pipeline_spark.sources.paginated import (
     register_paginated_source,
 )
+from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
+    _fold_ann,
+    _ivf_anchor,
+    _recheck_ivf_anchor,
+    load_stream_ann_state,
+)
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-    _load_anchor_corpus,
-    _load_anchor_index,
-    _merge_latest_tail,
-    _read_prior_batches,
-    _write_manifest,
+    _load_lsh_anchor,
     compact_stream_state,
     probe_batch,
     read_compaction_manifest,
@@ -121,41 +114,6 @@ from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
 from notion_vector_store_etl_pipeline_spark.streaming.pipeline import chunk_stage
 
 EMBED_DIM = 8
-
-# ---------------------------------------------------------------------------
-# Opt-in per-stage profiler for the composed stream's foreachBatch body
-# (VERDICT r13 #1: attribute the per-batch FIXED overhead to manifest /
-# state re-reads vs kernel floor vs scheduling before optimizing it).
-# When enabled, _process appends (batch_id, stage, seconds) rows; the
-# hook costs two perf_counter() calls per stage when off.
-_PROFILE: list | None = None
-
-
-def enable_stage_profile() -> list:
-    """Turn on stage timing; returns the live list the stream appends
-    (batch_id, stage, seconds) tuples to."""
-    global _PROFILE
-    _PROFILE = []
-    return _PROFILE
-
-
-def disable_stage_profile() -> None:
-    global _PROFILE
-    _PROFILE = None
-
-
-_PROFILE_BID = -1  # batch currently inside _process, for nested marks
-
-
-def _mark(batch_id: int, name: str, t0: float) -> float:
-    """Record the stage ``name`` as having run from ``t0`` to now;
-    returns now (the next stage's t0). No-op-cheap when profiling is
-    off."""
-    now = time.perf_counter()
-    if _PROFILE is not None:
-        _PROFILE.append((batch_id, name, now - t0))
-    return now
-
 
 def embedded_chunks(clean_docs: DataFrame, max_len: int = 400) -> DataFrame:
     """chunk -> embed: survivor docs to (vec_id, chunk id, doc_id,
@@ -207,7 +165,6 @@ def ingest_stage(
     ``return_clean_buckets`` appends the clean docs' melted LSH
     buckets as a fifth element — the stream's index-delta rows,
     reusing the probe's own signature pass (probe_batch docstring)."""
-    _t = time.perf_counter()
     probed = probe_batch(
         todo.select("doc_id", "text"),
         corpus_docs,
@@ -220,7 +177,6 @@ def ingest_stage(
         chain_policy=chain_policy,
     )
     flagged, clean = probed[0], probed[1]
-    _t = _mark(_PROFILE_BID, "kernel:probe", _t)
     # probe_batch consumes only (doc_id, text); rejoin for the chunk
     # stage's source column. localCheckpoint (ingest-batch-sized, the
     # same contract probe_batch itself uses): clean_full feeds the
@@ -232,14 +188,11 @@ def ingest_stage(
         .select("doc_id", "text", "source")
         .localCheckpoint(eager=True)
     )
-    _t = _mark(_PROFILE_BID, "kernel:clean_pin", _t)
     # sidecar only — the vectors scan would be discarded, and its
     # eager listing cost ~1 s/batch (VERDICT r13 #1); the memo behind
     # load_ivf_sidecar makes repeat anchors free
     c_ids, c_mat = load_ivf_sidecar(spark, ivf_index_path)
-    _t = _mark(_PROFILE_BID, "kernel:ivf_load", _t)
     chunks = embedded_chunks(clean_full, max_len).localCheckpoint(eager=True)
-    _t = _mark(_PROFILE_BID, "kernel:chunk_embed", _t)
     assigned = quantize_and_assign(
         chunks.select("vec_id", "emb"), c_ids, c_mat, topn=1, id_col="vec_id", emb_col="emb"
     )
@@ -254,8 +207,18 @@ def ingest_stage(
     return out
 
 
-def _state_manifest_path(out_dir: str) -> str:
-    return f"{out_dir}/state/_compaction/manifest.json"
+def _state_log(spark: SparkSession, out_dir: str) -> StateLog:
+    """The skip state's log: manifest and event-vacuum watermark under
+    ``state/_compaction``, folding the ``state``/``stale``/``revive``
+    trees."""
+    return StateLog(spark, out_dir, "state/_compaction")
+
+
+def _stale_through(spark: SparkSession, out_dir: str) -> int:
+    """The ann manifest's ``stale_through``: events at or below it were
+    CONSUMED by :func:`compact_pipeline_ann_state` (-1: none yet)."""
+    man = read_compaction_manifest(f"{out_dir}/ann", spark)
+    return (man or {}).get("stale_through", -1)
 
 
 def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
@@ -267,44 +230,41 @@ def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
     (the r11 "watermark-retired but not physically vacuumed" residual).
 
     Version windows are batch-ordered and monotone in ``v``, so the
-    scan walks contiguously from a per-tree vacuum watermark
-    (``state/_compaction/events_vacuum.json``) and stops at the first
-    version holding any unconsumed row — each call probes only
-    versions added since the last vacuum, never O(stream age). A
-    version dir missing (a prior crashed vacuum's completed delete, or
-    a window in which the tree had no events) just advances the
-    watermark. When a tree's versions root is left empty it is removed
-    so readers keep their fast is_dir miss. Crash-safe: the watermark
-    is written AFTER the deletes; a replay re-issues idempotent
-    deletes, never skips one. Returns the watermark dict.
+    scan is a :meth:`operators.statefs.StateLog.vacuum` walk from a
+    per-tree watermark (``state/_compaction/events_vacuum.json``) that
+    stops at the first version holding any unconsumed row — each call
+    probes only versions added since the last vacuum, never O(stream
+    age). A version dir missing (a prior crashed vacuum's completed
+    delete, or a window in which the tree had no events) just advances
+    the watermark. When a tree's versions root is left empty it is
+    removed so readers keep their fast is_dir miss. Returns the
+    watermark dict.
 
     Tail dirs below the STATE fold watermark are reclaimed by
     ``compact_ingest_state(prune_state=True)`` as before; with
     ``vacuum_events=True`` that fold also excludes already-consumed
     rows from the versions it writes, so fold + prune + this vacuum
     together leave no physical copy of a consumed event."""
-    fs = state_fs(spark, out_dir)
-    man = read_json(fs, _state_manifest_path(out_dir))
+    log = _state_log(spark, out_dir)
+    man = log.manifest()
     if not man:
         return {}
-    ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-    consumed = (ann_man or {}).get("stale_through", -1)
-    wm_path = f"{out_dir}/state/_compaction/events_vacuum.json"
-    wm = read_json(fs, wm_path) or {}
+    consumed = _stale_through(spark, out_dir)
     if consumed < 0:
         # no ann fold has ever consumed anything — nothing can be
         # vacuumable, so don't pay a per-call parquet scan (r11b
         # review #5: without this, every state-fold boundary of a
         # vacuum_events stream with no ann cadence launched two jobs
         # that could never delete)
-        return wm
-    changed = False
-    for tree in ("stale", "revive"):
-        root = f"{out_dir}/{tree}_versions"
-        through = wm.get(tree, 0)
-        head = wm.get(f"{tree}_head")  # [version, max_batch] cache
-        for j in range(through + 1, man["version"] + 1):
-            vdir = f"{root}/v={j}"
+        return log.vacuum("events_vacuum.json", {})
+    fs = log.fs
+
+    def walk(tree):
+        head_key = f"{tree}_head"  # [version, max_batch] of the blocker
+
+        def drop(j, wm):
+            vdir = f"{out_dir}/{tree}_versions/v={j}"
+            head = wm.get(head_key)
             if fs.is_dir(vdir):
                 if head and head[0] == j and head[1] > consumed:
                     # the blocking version's max batch is cached from a
@@ -313,26 +273,25 @@ def vacuum_consumed_events(spark: SparkSession, out_dir: str) -> dict:
                     # consumed rows (max never grows), so the cache is
                     # an upper bound: it may defer a delete one call,
                     # never delete early.
-                    break
+                    return False
                 mx = spark.read.parquet(vdir).agg(F.max("batch_id")).head()[0]
                 if mx is not None and mx > consumed:
-                    if head != [j, mx]:
-                        wm[f"{tree}_head"] = [j, mx]
-                        changed = True
-                    break
+                    wm[head_key] = [j, mx]
+                    return False
                 fs.delete_recursive(vdir)
-            through = j
-        if through != wm.get(tree, 0):
-            wm[tree] = through
-            changed = True
-            if wm.get(f"{tree}_head") and wm[f"{tree}_head"][0] <= through:
-                del wm[f"{tree}_head"]
+            if head and head[0] <= j:
+                del wm[head_key]  # the cached blocker is gone
+            return True
+
+        return man["version"], drop
+
+    wm = log.vacuum("events_vacuum.json", {t: walk(t) for t in ("stale", "revive")})
+    for tree in ("stale", "revive"):
+        root = f"{out_dir}/{tree}_versions"
         if fs.is_dir(root) and not any(
             n.startswith("v=") for n in fs.list_names(root)
         ):
             fs.delete_recursive(root)
-    if changed:
-        write_json_atomic(fs, wm_path, wm)
     return wm
 
 
@@ -345,13 +304,14 @@ def compact_ingest_state(
 ) -> dict:
     """Fold the ``state``/``stale``/``revive`` batch tails (N <=
     ``through_batch``) into the next ``{tree}_versions/v=<k>``
-    partitions and publish the watermark — the skip manifest's version
-    of the compaction both wings already have. ``batch_id`` survives
+    partitions and publish the watermark — a
+    :meth:`operators.statefs.StateLog.fold` (replay, orphan-version
+    and prune rules in that module's docstring). ``batch_id`` survives
     the fold as a data column (event ordering and latest-row skip
-    both need it). Without it the skip stage re-reads EVERY state
-    batch ever written per micro-batch: O(stream age) listing + read,
-    the exact unbounded term `_read_prior_batches` was built to kill
-    (a month of 1k batches/day = a 30k-dir enumeration per batch).
+    both need it). Without the fold the skip stage re-reads EVERY
+    state batch ever written per micro-batch: O(stream age) listing +
+    read (a month of 1k batches/day = a 30k-dir enumeration per
+    batch).
 
     The fold is ADDITIVE (each version holds only its window's rows,
     deduplicated within the window): the skip stage reduces the union
@@ -359,12 +319,8 @@ def compact_ingest_state(
     by max-batch rank, so duplicate rows across versions are harmless
     and no cross-version merge is needed — the same
     constant-scan-branch design as the dedup wing's
-    ``corpus_versions``. Idempotent below the watermark; a crash
-    between the version write and the publish leaves an orphan
-    ``v=<k>`` dir the read path's ``v <= version`` filter hides and a
-    retried compaction overwrites. ``prune_state=True`` deletes the
-    folded batch dirs after the publish (their rows live in the
-    version). ``vacuum_events=True`` additionally (a) excludes
+    ``corpus_versions``. ``prune_state=True`` deletes the folded batch
+    dirs after the publish. ``vacuum_events=True`` additionally (a) excludes
     stale/revive rows already CONSUMED by the ann fold (at or below the
     ann manifest's ``stale_through`` — their effect is physical in the
     index version) from the event versions this fold writes, and (b)
@@ -373,77 +329,52 @@ def compact_ingest_state(
     A retried fold under an advanced ann watermark rewrites ``v=<k>``
     with fewer consumed rows, all of which every reader already
     filters below ``stale_through``."""
-    from notion_vector_store_etl_pipeline_spark.operators.statefs import batch_dirs
-
-    fs = state_fs(spark, out_dir)
-    man = read_json(fs, _state_manifest_path(out_dir)) or {
-        "version": 0,
-        "through_batch": -1,
+    trees = {
+        # batch_id (the partition column of the per-batch dirs) is KEPT
+        # as a data column in every folded version: the skip stage needs
+        # it to order state rows (latest-per-doc), and stale/revive are
+        # ordered EVENTS whose batch rank decides liveness (module
+        # docstring)
+        "state": ["doc_id", "content_hash", "vec_ids", "batch_id"],
+        "stale": ["vec_id", "batch_id"],
+        "revive": ["vec_id", "batch_id"],
     }
-    prev = man["through_batch"]
-    if through_batch <= prev:
-        if vacuum_events:
-            # the ann watermark advances on its own cadence — consumed
-            # versions stay vacuumable even when this fold is a no-op
-            vacuum_consumed_events(spark, out_dir)
-        return man
-    consumed = -1
-    if vacuum_events:
-        ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-        consumed = (ann_man or {}).get("stale_through", -1)
-    k = man["version"] + 1
-    folded_dirs = []
-    # batch_id (the partition column of the per-batch dirs) is KEPT as
-    # a data column in every folded version: the skip stage needs it to
-    # order state rows (latest-per-doc), and stale/revive are ordered
-    # EVENTS whose batch rank decides liveness (module docstring)
-    for tree, cols in (
-        ("state", ["doc_id", "content_hash", "vec_ids", "batch_id"]),
-        ("stale", ["vec_id", "batch_id"]),
-        ("revive", ["vec_id", "batch_id"]),
-    ):
-        root = f"{out_dir}/{tree}"
-        dirs = batch_dirs(fs, root, prev, through_batch + 1)
-        if not dirs:
-            continue
-        window = (
-            spark.read.option("basePath", root)
-            .parquet(*dirs)
-            .select(*cols)
-            .dropDuplicates()
-        )
-        if tree != "state" and consumed >= 0:
-            window = window.filter(F.col("batch_id") > consumed)
-            if window.isEmpty():
-                # every row in the window was already consumed by the
-                # ann fold: writing an empty v=k dir would cost a write
-                # job now and a parquet max-scan in every later
-                # vacuum_consumed_events walk (ADVICE r11). The tail
-                # dirs still fold away — their rows' effect is physical
-                # in the ann index, and the readers' stale_through
-                # filter hides them regardless.
-                folded_dirs.extend(dirs)
+    log = _state_log(spark, out_dir)
+
+    def build(man, k, tails):
+        if not any(tails.values()):
+            return None
+        consumed = _stale_through(spark, out_dir) if vacuum_events else -1
+        for tree, cols in trees.items():
+            if not tails[tree]:
                 continue
-        window.write.mode("overwrite").parquet(
-            f"{out_dir}/{tree}_versions/v={k}"
-        )
-        folded_dirs.extend(dirs)
-    if not folded_dirs:
-        if vacuum_events:
-            # an idle feed advances through_batch without folding
-            # anything — consumed versions must still vacuum here, or
-            # they linger exactly while nothing else is happening
-            # (r11b review #1)
-            vacuum_consumed_events(spark, out_dir)
-        return man
-    man = {"version": k, "through_batch": through_batch}
-    write_json_atomic(fs, _state_manifest_path(out_dir), man)
-    if prune_state:
-        for d in folded_dirs:
-            fs.delete_recursive(d)
+            window = log.read(tree, cols, tails[tree]).dropDuplicates()
+            if tree != "state" and consumed >= 0:
+                window = window.filter(F.col("batch_id") > consumed)
+                if window.isEmpty():
+                    # every row in the window was already consumed by
+                    # the ann fold: writing an empty v=k dir would cost
+                    # a write job now and a parquet max-scan in every
+                    # later vacuum_consumed_events walk (ADVICE r11).
+                    # The tail dirs still fold away — their rows' effect
+                    # is physical in the ann index, and the readers'
+                    # stale_through filter hides them regardless.
+                    continue
+            window.write.mode("overwrite").parquet(
+                f"{out_dir}/{tree}_versions/v={k}"
+            )
+        return {"version": k, "through_batch": through_batch}
+
+    man, _ = log.fold(
+        through_batch, build, trees, prune=trees if prune_state else ()
+    )
     if vacuum_events:
+        # runs on a no-op fold too: the ann watermark advances on its
+        # own cadence, and an idle feed advances through_batch without
+        # folding anything — consumed versions must still vacuum then
+        # (r11b review #1)
         vacuum_consumed_events(spark, out_dir)
-    return man
+    return man or {"version": 0, "through_batch": -1}
 
 
 def _read_tree(
@@ -456,35 +387,13 @@ def _read_tree(
     """Folded ``{tree}_versions`` (one root, ``v <= version`` partition
     filter — constant scan-branch count) ∪ the uncompacted
     ``{tree}/batch_id=N`` tail (constructed from the watermark, O(tail)
-    point lookups).
-
-    The manifest is re-read AFTER the tail enumeration (the ADVICE r9
-    pattern from ``load_stream_ann_state``): a concurrent compaction
-    with ``prune_state`` could fold-and-delete the enumerated tail
-    between the two reads — anchoring on the stale watermark would
-    silently LOSE those batches' rows. If the watermark advanced, the
-    enumeration retries against the new anchor; the residual window
-    (prune after return, during the caller's read) fails LOUDLY with
-    missing files, never silently. In-process callers (the
-    ``foreachBatch`` loop) are sequential and take one pass."""
-    fs = state_fs(spark, out_dir)
-    for _ in range(5):
-        man = read_json(fs, _state_manifest_path(out_dir))
-        after = man["through_batch"] if man else -1
-        tail = _read_prior_batches(
-            spark, f"{out_dir}/{tree}", cols, before_batch, after_batch=after
-        )
-        man2 = read_json(fs, _state_manifest_path(out_dir))
-        if (man2["through_batch"] if man2 else -1) == after:
-            break
-        man = man2
-    else:
-        raise RuntimeError(
-            f"{tree} watermark kept advancing across 5 enumeration "
-            "attempts — a compaction loop is racing this reader"
-        )
+    point lookups). The two are anchored on one manifest read
+    (:meth:`operators.statefs.StateLog.anchored_tail`, rule 6)."""
+    log = _state_log(spark, out_dir)
+    man, dirs = log.anchored_tail(tree, before_batch)
+    tail = log.read(tree, cols, dirs)
     parts = []
-    if man and man["version"] > 0 and fs.is_dir(f"{out_dir}/{tree}_versions"):
+    if man and man["version"] > 0 and log.fs.is_dir(f"{out_dir}/{tree}_versions"):
         # memoized per manifest version (operators.cache.memo_df): the
         # folded tree is write-once below the watermark, and the eager
         # listing + schema inference of spark.read.parquet would
@@ -612,41 +521,39 @@ def load_pipeline_ann_state(
     still sit in the folded/base trees. Those vec_ids (a churn-sized
     set) get a scoped full-row dedup; every other row passes through
     untouched — no index-wide shuffle on the serve path."""
-    from notion_vector_store_etl_pipeline_spark.streaming.ann_stream import (
-        load_stream_ann_state,
-    )
-
     index, c_ids, c_mat = load_stream_ann_state(
         spark, f"{out_dir}/ann", ivf_index_path, before_batch
     )
-    ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-    consumed = (ann_man or {}).get("stale_through", -1)
+    consumed = _stale_through(spark, out_dir)
     stale = read_stale_vectors(spark, out_dir, before_batch, after_batch=consumed)
     revive = read_revived_vectors(
         spark, out_dir, before_batch, after_batch=consumed
     )
-    rb = (
-        revive.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
-        if revive is not None
-        else None
-    )
     if stale is not None:
-        sb = stale.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
-        if rb is not None:
-            dead = (
-                sb.join(rb, "vec_id", "left")
-                .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
-                .select("vec_id")
-            )
-        else:
-            dead = sb.select("vec_id")
-        index = index.join(dead, "vec_id", "left_anti")
-    if rb is not None:
-        dup_ids = rb.select("vec_id")
+        index = index.join(_dead_vec_ids(stale, revive), "vec_id", "left_anti")
+    if revive is not None:
+        dup_ids = _newest_event(revive, "rb").select("vec_id")
         index = index.join(dup_ids, "vec_id", "left_anti").unionByName(
             index.join(dup_ids, "vec_id", "left_semi").dropDuplicates(["vec_id"])
         )
     return index, c_ids, c_mat
+
+
+def _newest_event(events: DataFrame, name: str) -> DataFrame:
+    return events.groupBy("vec_id").agg(F.max("batch_id").alias(name))
+
+
+def _dead_vec_ids(stale: DataFrame, revive: DataFrame | None) -> DataFrame:
+    """vec_ids whose newest stale event outranks their newest revive
+    event (module docstring)."""
+    sb = _newest_event(stale, "sb")
+    if revive is None:
+        return sb.select("vec_id")
+    return (
+        sb.join(_newest_event(revive, "rb"), "vec_id", "left")
+        .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
+        .select("vec_id")
+    )
 
 
 def compact_pipeline_ann_state(
@@ -679,9 +586,10 @@ def compact_pipeline_ann_state(
       before and after the fold while its subtraction list stays
       O(fold window).
 
-    Idempotent below the watermark like both wings' compactions; a
-    crash between the version write and the publish leaves an orphan
-    version dir the retried fold overwrites. The generic
+    The fold itself is the ann wing's one fold body
+    (:func:`streaming.ann_stream.compact_ann_stream_state`, a
+    :class:`operators.statefs.StateLog` fold); this function adds only
+    the event window. The generic
     ``compact_ann_stream_state`` must NOT be pointed at a pipeline
     tree for reclamation (it folds verbatim and advances only
     ``through_batch``) — doing so is still CORRECT (events stay
@@ -695,82 +603,34 @@ def compact_pipeline_ann_state(
     state fold+prune, as before). The streaming wrapper wires this to
     its ``vacuum_events`` knob so a stream configured to KEEP event
     history keeps it everywhere."""
-    from notion_vector_store_etl_pipeline_spark.operators.statefs import (
-        batch_dirs as _batch_dirs,
-    )
 
-    ann_dir = f"{out_dir}/ann"
-    fs = state_fs(spark, ann_dir)
-    man = read_compaction_manifest(ann_dir, spark)
-    prev = man["through_batch"] if man else -1
-    if through_batch <= prev:
-        return man
-    deltas = _batch_dirs(fs, f"{ann_dir}/delta", prev, through_batch + 1)
-    stale_prev = (man or {}).get("stale_through", -1)
-    stale_ev = read_stale_vectors(
-        spark, out_dir, through_batch + 1, after_batch=stale_prev
-    )
-    revive_ev = read_revived_vectors(
-        spark, out_dir, through_batch + 1, after_batch=stale_prev
-    )
-    has_events = stale_ev is not None and not stale_ev.isEmpty()
-    if not deltas and not rebuild_centroids and not has_events:
-        return man
-    dead = None
-    dedup_rows = False
-    if has_events:
-        sb = stale_ev.groupBy("vec_id").agg(F.max("batch_id").alias("sb"))
-        if revive_ev is not None:
-            rb = revive_ev.groupBy("vec_id").agg(F.max("batch_id").alias("rb"))
-            dead = (
-                sb.join(rb, "vec_id", "left")
-                .filter(F.col("sb") > F.coalesce(F.col("rb"), F.lit(-1)))
-                .select("vec_id")
-            )
-        else:
-            dead = sb.select("vec_id")
-    if revive_ev is not None and not revive_ev.isEmpty():
-        dedup_rows = True
-    k = (man["version"] + 1) if man else 1
-    base = man["index_path"] if man else base_index_path
-    out_path = f"{ann_dir}/index_versions/v{k}"
-    if rebuild_centroids:
-        rebuild_ivf_index(
-            spark,
-            base,
-            deltas,
-            out_path,
-            sample_mod=rebuild_sample_mod,
-            drop_vec_ids=dead,
-            dedup_rows=dedup_rows,
+    def reclaim(man):
+        after = (man or {}).get("stale_through", -1)
+        stale = read_stale_vectors(spark, out_dir, through_batch + 1, after_batch=after)
+        revive = read_revived_vectors(
+            spark, out_dir, through_batch + 1, after_batch=after
         )
-    else:
-        compact_ivf_index(
-            spark, base, deltas, out_path, drop_vec_ids=dead, dedup_rows=dedup_rows
-        )
-    manifest = {
-        "version": k,
-        "index_path": out_path,
-        "through_batch": through_batch,
-        "centroids": "refreshed" if rebuild_centroids else "carried",
-        "stale_through": through_batch,
-    }
-    _write_manifest(ann_dir, manifest, spark)
-    if vacuum_consumed:
+        if stale is None or stale.isEmpty():
+            return None, revive
+        return _dead_vec_ids(stale, revive), revive
+
+    man, published = _fold_ann(
+        spark,
+        f"{out_dir}/ann",
+        through_batch,
+        base_index_path,
+        prune_deltas,
+        retain_versions,
+        rebuild_centroids,
+        rebuild_sample_mod,
+        reclaim=reclaim,
+    )
+    if published and vacuum_consumed:
         # consumed event versions become pure history at THIS publish —
         # reclaim them now (idempotent, watermark-walk cheap) rather
         # than waiting for the next state fold's vacuum_events pass
         vacuum_consumed_events(spark, out_dir)
-    if prune_deltas:
-        for d in deltas:
-            fs.delete_recursive(d)
-    if retain_versions is not None:
-        from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
-            vacuum_index_versions,
-        )
-
-        vacuum_index_versions(spark, ann_dir, k, retain_versions)
-    return manifest
+    return man
 
 
 def streaming_ingest_etl(
@@ -852,9 +712,6 @@ def streaming_ingest_etl(
         # cadence of idle pages). Folds cover COMMITTED batches only
         # (everything before this one); replays hit the watermark and
         # no-op.
-        global _PROFILE_BID
-        _PROFILE_BID = batch_id
-        _t = time.perf_counter()
         at_boundary = lambda every: every and batch_id > 0 and batch_id % every == 0  # noqa: E731
         if at_boundary(compact_state_every):
             compact_ingest_state(
@@ -903,7 +760,6 @@ def streaming_ingest_etl(
                 ),
                 rebuild_sample_mod=rebuild_sample_mod,
             )
-        _t = _mark(batch_id, "folds", _t)
         if batch.isEmpty():
             return
         # pin the micro-batch once: it feeds the skip join AND the
@@ -912,7 +768,6 @@ def streaming_ingest_etl(
         batch = batch.withColumn(
             "content_hash", F.sha2(F.col("text"), 256)
         ).localCheckpoint(eager=True)
-        _t = _mark(batch_id, "pin_batch", _t)
         prior = read_ingest_state(spark, out_dir, batch_id)
         todo = batch
         if prior is not None:
@@ -957,51 +812,13 @@ def streaming_ingest_etl(
                 # is a pure function of state below this batch, so a
                 # crash-replay skips identically.
                 return
-        _t = _mark(batch_id, "skip", _t)
-        if update_index:
-            # probe corpus ∪ committed stream state: anchor on the
-            # dedup compaction manifest (folded index version + folded
-            # clean corpus) and union only the uncompacted tail — the
-            # dedup wing's exact read shape (streaming/dedup_stream.py)
-            anchor = dedup_man or base_dedup_manifest
-            lsh_index = _load_anchor_index(spark, anchor)
-            corpus_docs = _load_anchor_corpus(spark, anchor, out_dir)
-            after = anchor["through_batch"]
-            deltas = _read_prior_batches(
-                spark,
-                f"{out_dir}/index_delta",
-                ["sid", "band", "bucket"],
-                batch_id,
-                after,
-            )
-            if deltas is not None:
-                lsh_index = lsh_index.unionByName(deltas)
-            prior_clean = _read_prior_batches(
-                spark,
-                f"{out_dir}/clean",
-                ["doc_id", "text", "batch_id"],
-                batch_id,
-                after,
-            )
-            if prior_clean is not None:
-                # per-doc LATEST text in the tail: an updated doc has
-                # clean rows in several batches, and the verify
-                # universe wants one (current) text per sid. The
-                # anti-join is a broadcast filter on the big side — no
-                # corpus shuffle. A doc edited across FOLD windows is
-                # handled one level down: compact_stream_state records
-                # its id in the superseded sidecar and
-                # _load_anchor_corpus resolves latest-wins, so the
-                # verify universe carries exactly one (current) text
-                # per sid (r11b — closed the flag-against-retired-text
-                # residual).
-                corpus_docs = _merge_latest_tail(corpus_docs, prior_clean)
-        else:
-            if lsh_index_table:
-                lsh_index = load_lsh_index_bucketed(spark, lsh_index_table)
-            else:
-                lsh_index = load_lsh_index(spark, lsh_index_path)
-            corpus_docs = spark.read.parquet(corpus_path).select("doc_id", "text")
+        # probe corpus ∪ committed stream state (update_index; else the
+        # base corpus alone): anchor on the dedup compaction manifest
+        # (folded index version + folded clean corpus) and union only
+        # the uncompacted tail — the dedup wing's exact read shape
+        lsh_index, corpus_docs = _load_lsh_anchor(
+            spark, out_dir, dedup_man or base_dedup_manifest, batch_id, update_index
+        )
         # resolve the IVF anchor through the ann tree's compaction
         # manifest: after a rebuild_centroids fold on {out}/ann, the
         # published version carries a REFRESHED sidecar — assigning new
@@ -1009,9 +826,7 @@ def streaming_ingest_etl(
         # them that the refreshed sidecar's probes never select (silent
         # recall collapse; the same rule ann_stream re-reads its anchor
         # per batch for)
-        ann_man = read_compaction_manifest(f"{out_dir}/ann", spark)
-        ivf_anchor = ann_man["index_path"] if ann_man else ivf_index_path
-        _t = _mark(batch_id, "anchor_load", _t)
+        ivf_anchor = _ivf_anchor(spark, f"{out_dir}/ann", ivf_index_path)
         # intra_batch rides update_index: intra-stream dedup that
         # caught a pair split ACROSS batches but let the same pair
         # through when a page boundary happened to put both docs in
@@ -1032,7 +847,6 @@ def streaming_ingest_etl(
             chain_policy=chain_policy,
         )
         flagged, clean, chunks, assigned = staged[:4]
-        _t = _mark(batch_id, "kernel", _t)
         # batch_id-keyed overwrites => replay-idempotent, same
         # discipline as both wings
         flagged.write.mode("overwrite").parquet(
@@ -1049,7 +863,6 @@ def streaming_ingest_etl(
             staged[4].write.mode("overwrite").parquet(
                 f"{out_dir}/index_delta/batch_id={batch_id}"
             )
-        _t = _mark(batch_id, "write_outputs", _t)
         # plain sorted files, not partitionBy(list_id) — the micro-batch
         # delta small-files fix; see ann_stream's delta write for the
         # full rationale (row-group stats replace partition pruning on
@@ -1057,24 +870,9 @@ def streaming_ingest_etl(
         assigned.repartition("list_id").sortWithinPartitions("list_id").write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/ann/delta/batch_id={batch_id}/vectors")
-        # writer-side anchor re-validation (ADVICE r10, mirroring
-        # ann_stream): an OUT-OF-BAND rebuild publishing between the
-        # anchor read above and the delta landing leaves old-centroid
-        # list_ids above the new watermark — permanent once folded.
-        # Fail LOUDLY before the state write: the stream restart
-        # replays this batch against the current sidecar (every write
-        # so far is a batch_id-keyed overwrite). In-process folds
-        # (compact_ann_every) are sequential and never race.
-        ann_man2 = read_compaction_manifest(f"{out_dir}/ann", spark)
-        anchor2 = ann_man2["index_path"] if ann_man2 else ivf_index_path
-        if anchor2 != ivf_anchor:
-            raise RuntimeError(
-                f"composed ingest batch {batch_id}: IVF anchor changed "
-                f"{ivf_anchor!r} -> {anchor2!r} during the batch (concurrent "
-                "external rebuild) — restart the stream to replay this "
-                "batch against the current sidecar"
-            )
-        _t = _mark(batch_id, "write_ann", _t)
+        # before the state write: a failed re-check replays this batch
+        # with every write so far a batch_id-keyed overwrite
+        _recheck_ivf_anchor(spark, f"{out_dir}/ann", ivf_index_path, ivf_anchor, batch_id)
         # stale/revive events: every doc (re)processed this batch
         # supersedes its LATEST prior version's vectors. Latest-version
         # vec_ids the new content does NOT regenerate -> stale (the
@@ -1126,7 +924,6 @@ def streaming_ingest_etl(
         revive.write.mode("overwrite").parquet(
             f"{out_dir}/revive/batch_id={batch_id}"
         )
-        _t = _mark(batch_id, "events", _t)
         # state LAST: a crash before this point replays the batch with
         # the doc not yet marked processed (rewrite, idempotent); after
         # it, the epoch commit is the only step left. Each row carries
@@ -1157,7 +954,6 @@ def streaming_ingest_etl(
             .write.mode("overwrite")
             .parquet(f"{out_dir}/state/batch_id={batch_id}")
         )
-        _mark(batch_id, "write_state", _t)
 
     docs = (
         spark.readStream.format("paginated")

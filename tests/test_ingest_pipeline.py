@@ -253,9 +253,9 @@ def test_streaming_composed_etl_state_compaction(spark, tmp_path):
         state_fs,
     )
     from notion_vector_store_etl_pipeline_spark.streaming.ingest_pipeline import (
-        _state_manifest_path,
         read_ingest_state,
     )
+    from tests.state_helpers import state_manifest_path as _state_manifest_path
 
     incoming, corpus_path, lsh_path, ivf_path = _fixture(spark, tmp_path)
     inc = incoming.orderBy("doc_id").toPandas()

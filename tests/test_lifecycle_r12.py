@@ -26,7 +26,6 @@ from notion_vector_store_etl_pipeline_spark.operators import dedup as D
 from notion_vector_store_etl_pipeline_spark.streaming.dedup_stream import (
     _load_anchor_corpus,
     _load_anchor_index,
-    _write_manifest,
     compact_stream_state,
     latest_committed_batch,
     read_compaction_manifest,
@@ -42,6 +41,7 @@ from tests.test_ingest_pipeline_r11 import (  # noqa: F401  (fixture deps)
     _served,
 )
 from tests.test_ingest_pipeline import _fixture
+from tests.state_helpers import write_manifest as _write_manifest
 
 
 @pytest.fixture(scope="module")

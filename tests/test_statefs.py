@@ -16,6 +16,7 @@ import pytest
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     HadoopFS,
     PosixFS,
+    StateLog,
     batch_dirs,
     path_scheme,
     read_json,
@@ -291,3 +292,144 @@ def test_publish_fallback_reraises_noncompleted_java_failure(spark, tmp_path):
     finally:
         fs._jvm = real_jvm
     assert read_json(fs, f"{root}/m.json") == {"version": 2}
+
+
+# ---------------------------------------------------------------------------
+# Crash pins for the StateLog protocol (module docstring rules 2-5): an
+# in-process fault at each step, then a retry, must leave the state a
+# reader sees equal to a run that never crashed. The wing is a toy —
+# version k is one small file holding every row folded so far — so the
+# pins cost no Spark job.
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _root(path, scheme):
+    return str(path) if scheme == "posix" else f"file:{path}"
+
+
+def _toy_fold(log, through, crash_at=None):
+    def build(man, k, tails):
+        if not tails["delta"]:
+            return None
+        rows = (
+            log.fs.read_text(f"{log.root}/versions/v{man['version']}/rows").split()
+            if man
+            else []
+        )
+        rows += [log.fs.read_text(f"{d}/rows") for d in tails["delta"]]
+        log.fs.write_text_atomic(f"{log.root}/versions/v{k}/rows", " ".join(rows))
+        return {"version": k, "through_batch": through}
+
+    if crash_at:
+        publish = log.publish
+
+        def crashing_publish(man):
+            if crash_at == "publish":
+                publish(man)
+            raise _Crash(f"at the {crash_at} step")
+
+        log.publish = crashing_publish
+    return log.fold(through, build, ("delta",), prune=("delta",))
+
+
+def _write_batches(log, batches):
+    for b in batches:
+        log.fs.write_text_atomic(f"{log.root}/delta/batch_id={b}/rows", f"r{b}")
+
+
+def _reader_view(log):
+    """What a reader anchors on: the manifest, the tail above its
+    watermark, and the folded version's rows."""
+    man, dirs = log.anchored_tail("delta", 10**9)
+    folded = (
+        log.fs.read_text(f"{log.root}/versions/v{man['version']}/rows") if man else ""
+    )
+    return man, [d.rsplit("/", 1)[1] for d in dirs], folded
+
+
+# "write": after the version write, before the publish;
+# "publish": after the publish, before the prune
+@pytest.mark.parametrize("crash_at", ["write", "publish"])
+@pytest.mark.parametrize("scheme", ["posix", "hadoop"])
+def test_fold_crash_then_retry_equals_uncrashed_run(spark, tmp_path, scheme, crash_at):
+    def run(name, crash):
+        root = _root(tmp_path / name, scheme)
+        log = StateLog(spark, root)
+        _write_batches(log, range(4))
+        _toy_fold(log, 1)
+        _write_batches(log, range(4, 6))
+        if crash:
+            with pytest.raises(_Crash):
+                _toy_fold(StateLog(spark, root), 4, crash_at)
+            log = StateLog(spark, root)
+            if crash_at == "write":
+                # the orphan v2 is invisible: the manifest still names
+                # v1 and the reader's tail still starts above batch 1
+                assert log.fs.exists(f"{root}/versions/v2/rows")
+                assert _reader_view(log)[:2] == (
+                    {"version": 1, "through_batch": 1},
+                    [f"batch_id={b}" for b in range(2, 6)],
+                )
+                # a torn orphan must not survive the retry
+                log.fs.write_text_atomic(f"{root}/versions/v2/rows", "torn")
+            else:
+                # published but not pruned: the folded tail sits below
+                # the watermark, where no anchored read looks
+                assert log.manifest() == {"version": 2, "through_batch": 4}
+                assert log.fs.is_dir(f"{root}/delta/batch_id=2")
+        # the retry, as a restarted process would run it
+        man, published = _toy_fold(StateLog(spark, root), 4)
+        assert published == (not crash or crash_at == "write")
+        return _reader_view(StateLog(spark, root))
+
+    want = run("clean", False)
+    assert want == (
+        {"version": 2, "through_batch": 4},
+        ["batch_id=5"],
+        "r0 r1 r2 r3 r4",
+    )
+    assert run("crashed", True) == want
+
+
+@pytest.mark.parametrize("scheme", ["posix", "hadoop"])
+def test_vacuum_crash_mid_walk_never_passes_an_undeleted_version(
+    spark, tmp_path, scheme
+):
+    def run(name, crash):
+        root = _root(tmp_path / name, scheme)
+        log = StateLog(spark, root)
+        for j in range(1, 6):
+            log.fs.write_text_atomic(f"{root}/versions/v{j}/rows", f"v{j}")
+        deleted = []
+
+        def drop(j, _wm):
+            if crash and deleted:
+                raise _Crash("mid-vacuum, after the first delete")
+            log.fs.delete_recursive(f"{root}/versions/v{j}")
+            deleted.append(j)
+            return True
+
+        def check_watermark():
+            wm = read_json(log.fs, f"{root}/_compaction/vacuum.json") or {}
+            through = wm.get("vacuumed_through", 0)
+            assert all(
+                not log.fs.exists(f"{root}/versions/v{j}") for j in range(1, through + 1)
+            ), wm
+            return wm
+
+        if crash:
+            with pytest.raises(_Crash):
+                log.vacuum("vacuum.json", {"vacuumed_through": (3, drop)})
+            assert check_watermark() == {}
+            assert deleted == [1] and log.fs.exists(f"{root}/versions/v2")
+            crash = False
+        wm = log.vacuum("vacuum.json", {"vacuumed_through": (3, drop)})
+        assert check_watermark() == wm
+        return wm, sorted(log.fs.list_names(f"{root}/versions"))
+
+    want = run("clean", False)
+    assert want == ({"vacuumed_through": 3}, ["v4", "v5"])
+    assert run("crashed", True) == want
