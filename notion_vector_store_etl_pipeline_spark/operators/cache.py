@@ -61,10 +61,10 @@ def persist_tracked(df: DataFrame, eager: bool = False) -> DataFrame:
 def tracked_snapshot() -> tuple:
     """Identity snapshot of the currently tracked persists — pair with
     :func:`release_tracked_except` to scope a composite operator's
-    cache lifetime to the operator call (streaming probe_batch: the
-    call ends with an eager checkpoint, so every cache registered
-    DURING it — its own and nested operators' — is fully consumed by
-    then and safe to drop, ADVICE r9).
+    cache lifetime to the operator call (streaming.ann_stream
+    .probe_vector_batch: the call ends with an eager checkpoint, so
+    every cache registered DURING it — its own and nested operators' —
+    is fully consumed by then and safe to drop, ADVICE r9).
 
     The snapshot holds STRONG references to the DataFrames themselves,
     not bare ``id()`` values: CPython recycles addresses after GC, so
@@ -91,6 +91,16 @@ def release_tracked_except(snapshot: tuple) -> None:
             except Exception:
                 pass
     _PERSISTED.extend(reversed(keep))
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the executor blocks behind ``df``, a frame returned by
+    ``localCheckpoint``, once nothing will read it again.
+    ``DataFrame.unpersist`` cannot reach them (they are a persisted RDD,
+    not a cache entry), so they would otherwise stay until the JVM
+    garbage-collects the RDD. A plan that still reads ``df`` fails
+    afterwards with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def release_cache() -> None:

@@ -213,10 +213,24 @@ def minhash_signatures(
     cross-engine :func:`sha60` so a DuckDB oracle replays the exact
     signatures — projected ONCE per shingle row before the aggregate
     (see :func:`_minhash_cols`)."""
+    return shingle_signatures(
+        df.select(
+            F.col(id_col).alias("sid"),
+            F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+        ),
+        num_hashes,
+        checkable,
+    )
+
+
+def shingle_signatures(
+    shingles: DataFrame, num_hashes: int = 32, checkable: bool = False
+) -> DataFrame:
+    """(sid, mh_0..mh_{n-1}) from already-exploded (sid, shingle) rows —
+    the hashing half of :func:`minhash_signatures`, for callers that
+    hold a shingle table and must not run the shingle UDF again."""
     raw = sha60(F.col("shingle")) if checkable else F.xxhash64(F.col("shingle"))
-    sh = df.select(
-        F.col(id_col).alias("sid"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle")
-    ).select("sid", F.pmod(raw, F.lit(MERSENNE_PRIME)).alias("_mh_base"))
+    sh = shingles.select("sid", F.pmod(raw, F.lit(MERSENNE_PRIME)).alias("_mh_base"))
     return sh.groupBy("sid").agg(*_minhash_cols(num_hashes, F.col("_mh_base")))
 
 
@@ -267,7 +281,6 @@ def minhash_lsh_candidates(
     rows_per_band: int = 4,
     checkable: bool = False,
     dense_bucket_cap: int | None = None,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """Band the signature and bucket-join in ONE pass: melt each row to
     (sid, band, bucket) via posexplode of the per-band bucket hashes,
@@ -294,11 +307,10 @@ def minhash_lsh_candidates(
     window pass, not an extra wide exchange."""
     melted = melted_signature_buckets(signatures, bands, rows_per_band, checkable)
     if dense_bucket_cap is None:
-        # both sides of the bucket self-join; eager (corpus scale) so
-        # the two scan stages can't race the cache populate and re-run
-        # the signature pipeline — lazy from micro-batch callers (see
-        # jaccard_verify_pairs docstring)
-        melted = _persist(melted, eager=eager_persists)
+        # both sides of the bucket self-join; eager so the two scan
+        # stages can't race the cache populate and re-run the
+        # signature pipeline
+        melted = _persist(melted, eager=True)
         x = melted.select(F.col("sid").alias("a_id"), "band", "bucket")
         y = melted.select(F.col("sid").alias("b_id"), "band", "bucket")
         return (
@@ -307,25 +319,40 @@ def minhash_lsh_candidates(
             .select("a_id", "b_id")
             .dropDuplicates()
         )
-    # bucket size, min-sid representative and the chain successor all
-    # come out of ONE (band, bucket) window pass — the previous
-    # stats-aggregate + join-back formulation paid an extra map-side
-    # agg shuffle plus the join for the same values (VERDICT r13 #2)
+    # 4 consumers (sparse self-join both sides + dense star/chain) under
+    # one action — eager so the branches can't race the cache populate
+    # and re-run signatures+window per branch
+    return bucket_pairs(
+        _persist(bucket_windows(melted), eager=True), dense_bucket_cap
+    )
+
+
+def bucket_windows(melted: DataFrame) -> DataFrame:
+    """Melted (sid, band, bucket) rows plus each bucket's size
+    (``_bsize``), min-sid representative (``_rep``) and the next member
+    in sid order (``_next``) — all from ONE (band, bucket) window pass;
+    the previous stats-aggregate + join-back formulation paid an extra
+    map-side agg shuffle plus the join for the same values (VERDICT r13
+    #2)."""
     from pyspark.sql.window import Window
 
     w_all = Window.partitionBy("band", "bucket")
     w_ord = w_all.orderBy("sid")
-    m = _persist(
+    return (
         melted.withColumn("_bsize", F.count(F.lit(1)).over(w_all))
         .withColumn("_rep", F.min("sid").over(w_all))
         .withColumn("_next", F.lead("sid").over(w_ord))
-        ,
-        eager=eager_persists,
-    )  # 4 consumers (sparse self-join both sides + dense star/chain)
-    # under one action — eager at corpus scale so the branches can't
-    # race the cache populate and re-run signatures+window per branch;
-    # lazy from micro-batch callers (see jaccard_verify_pairs docstring)
-    sparse = m.filter(F.col("_bsize") <= dense_bucket_cap)
+    )
+
+
+def bucket_pairs(windowed: DataFrame, dense_bucket_cap: int) -> DataFrame:
+    """Distinct candidate (a_id < b_id) pairs from :func:`bucket_windows`
+    rows: all pairs within buckets of at most ``dense_bucket_cap``
+    members, star + chain edges within larger ones (the skew guard
+    :func:`minhash_lsh_candidates` documents). ``windowed`` is read by
+    four branches of one plan; a caller whose input is costly to
+    recompute persists it first."""
+    sparse = windowed.filter(F.col("_bsize") <= dense_bucket_cap)
     x = sparse.select(F.col("sid").alias("a_id"), "band", "bucket")
     y = sparse.select(F.col("sid").alias("b_id"), "band", "bucket")
     sparse_pairs = (
@@ -334,7 +361,7 @@ def minhash_lsh_candidates(
         .select("a_id", "b_id")
     )
     # _rep = min(sid) over the bucket, so a_id < b_id by construction
-    dense = m.filter(F.col("_bsize") > dense_bucket_cap)
+    dense = windowed.filter(F.col("_bsize") > dense_bucket_cap)
     star = dense.filter(F.col("sid") != F.col("_rep")).select(
         F.col("_rep").alias("a_id"), F.col("sid").alias("b_id")
     )
@@ -353,18 +380,13 @@ def jaccard_verify_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.2,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """Exact Jaccard computed ONLY for the given candidate pairs: join
     each side to its (distinct) shingle array, then set math per pair —
-    O(candidates · shingles), never all-pairs.
-
-    ``eager_persists``: materialize the multi-consumer shingle table
-    up front so concurrent scan stages can't race the cache populate
-    and re-shingle per branch — right for corpus-scale inputs (the
-    registered batch queries; r14 A/B: minhash family -6..-16%).
-    Streaming probes pass False: on micro-batch-sized frames the
-    racing recompute is cheaper than the extra count job per batch."""
+    O(candidates · shingles), never all-pairs. The shingle table is
+    materialized up front (eager persist): both join sides read it, and
+    with a lazy cache the concurrent scan stages race the populate and
+    re-shingle per branch (r14 A/B: minhash family -6..-16%)."""
     # shingle only the docs that appear in a candidate pair — a semi-join
     # keeps the (Python) shingle UDF off the rest of the corpus; at LSH
     # candidate rates of <<1% this is the difference between re-scanning
@@ -377,10 +399,21 @@ def jaccard_verify_pairs(
         base.select(
             F.col(id_col).alias("sid"), word_shingles(F.col(text_col), k).alias("sh")
         ),
-        eager=eager_persists,
-    )  # consumed by both join sides of one action (see docstring)
-    a = sets_df.select(F.col("sid").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = sets_df.select(F.col("sid").alias("b_id"), F.col("sh").alias("sh_b"))
+        eager=True,
+    )
+    return jaccard_on_sets(pairs, sets_df, sets_df, threshold)
+
+
+def jaccard_on_sets(
+    pairs: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float = 0.2
+) -> DataFrame:
+    """(a_id, b_id, jaccard) for the ``pairs`` whose shingle sets —
+    (sid, sh) rows, ``sets_a`` for the a side and ``sets_b`` for the b
+    side — reach ``threshold``; a pair with a missing side drops out.
+    The set math of :func:`jaccard_verify_pairs`, shared with callers
+    that already hold the shingle tables."""
+    a = sets_a.select(F.col("sid").alias("a_id"), F.col("sh").alias("sh_a"))
+    b = sets_b.select(F.col("sid").alias("b_id"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -401,7 +434,6 @@ def minhash_neardup(
     bands: int = 8,
     checkable: bool = False,
     dense_bucket_cap: int | None = DENSE_BUCKET_CAP,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard — the 100 TB near-dup
     path: candidate generation AND verification are candidate-local,
@@ -414,11 +446,10 @@ def minhash_neardup(
     blowup (see :func:`minhash_lsh_candidates`); ``None`` disables."""
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, checkable=checkable)
-    # persisted: verification reads candidates three times (both sides
-    # of the candidate-id union and the pair join) — without this the
-    # whole signature + bucket-join pipeline would recompute; eager at
-    # corpus scale so those branches can't race the cache populate,
-    # lazy from micro-batch callers (see jaccard_verify_pairs)
+    # persisted eagerly: verification reads candidates three times (both
+    # sides of the candidate-id union and the pair join) — without this
+    # the whole signature + bucket-join pipeline would recompute, and a
+    # lazy cache would let those branches race its populate
     candidates = _persist(
         minhash_lsh_candidates(
             sigs,
@@ -426,18 +457,10 @@ def minhash_neardup(
             rows_per_band,
             checkable=checkable,
             dense_bucket_cap=dense_bucket_cap,
-            eager_persists=eager_persists,
         ),
-        eager=eager_persists,
+        eager=True,
     )
-    return jaccard_verify_pairs(
-        df,
-        candidates,
-        text_col,
-        id_col,
-        threshold=threshold,
-        eager_persists=eager_persists,
-    )
+    return jaccard_verify_pairs(df, candidates, text_col, id_col, threshold=threshold)
 
 
 #: Chain-disposition policies for intra-set dedup over verified pairs
@@ -836,7 +859,6 @@ def minhash_probe_neardup(
     checkable: bool = False,
     dense_bucket_cap: int | None = DENSE_BUCKET_CAP,
     corpus_index: DataFrame | None = None,
-    eager_persists: bool = True,
 ) -> DataFrame:
     """INCREMENTAL near-dup: probe a batch of new docs against the
     existing corpus's LSH buckets — the join a 100 TB pipeline runs per
@@ -881,18 +903,16 @@ def minhash_probe_neardup(
         checkable,
     )
     cand = minhash_probe_candidates(mb, mc)
-    # eager (by default) for the same three-consumer reason as
-    # minhash_neardup's candidate persist (both sides of the
-    # candidate-id union + the pair join race a lazy cache); lazy from
-    # micro-batch callers (see jaccard_verify_pairs docstring)
+    # eager for the same three-consumer reason as minhash_neardup's
+    # candidate persist (both sides of the candidate-id union + the
+    # pair join race a lazy cache)
     verified = jaccard_verify_pairs(
         df,
-        _persist(cand, eager=eager_persists),
+        _persist(cand, eager=True),
         text_col,
         id_col,
         k=3,
         threshold=threshold,
-        eager_persists=eager_persists,
     )
     return verified.select(
         F.col("a_id").alias("batch_id"),

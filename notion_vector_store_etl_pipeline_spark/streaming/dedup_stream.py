@@ -43,7 +43,8 @@ Intra-batch near-dups (ADVICE r8): by default two near-dup docs that
 arrive in the SAME micro-batch are both clean — cross-batch dedup only,
 so coverage at the margin depends on page/batch boundaries.
 ``intra_batch=True`` closes the gap: after the corpus probe, the batch
-survivors are self-joined (:func:`operators.dedup.minhash_neardup`)
+survivors' LSH buckets are self-joined (:func:`operators.dedup
+.bucket_pairs`, the dense-bucket body of ``minhash_lsh_candidates``)
 and verified pairs flag the higher id against the lower (first-wins by
 id, matching the batch engine's ``dedup_first_wins`` convention).
 Multi-doc CHAINS a~b~c resolve per ``chain_policy``
@@ -69,8 +70,7 @@ from pyspark.sql.streaming import StreamingQuery
 from notion_vector_store_etl_pipeline_spark.operators.cache import (
     memo_df,
     release_cache,
-    release_tracked_except,
-    tracked_snapshot,
+    release_checkpoint,
 )
 from notion_vector_store_etl_pipeline_spark.operators.statefs import (
     StateLog,
@@ -81,15 +81,18 @@ from notion_vector_store_etl_pipeline_spark.operators.dedup import (
     DENSE_BUCKET_CAP,
     PROBE_DENSE_KEEP,
     sequential_firstwins_pairs,
+    bucket_pairs,
+    bucket_windows,
     build_lsh_index,
     compact_lsh_index,
-    jaccard_verify_pairs,
+    jaccard_on_sets,
     load_lsh_index,
     load_lsh_index_bucketed,
     melted_signature_buckets,
-    minhash_neardup,
     minhash_probe_candidates,
     minhash_signatures,
+    shingle_signatures,
+    word_shingles,
     write_lsh_index,
     write_lsh_index_bucketed,
 )
@@ -152,15 +155,22 @@ def probe_batch(
     clean docs read back from disk (r10 review; byte-identical rows,
     the computation is per-row deterministic).
 
-    Cache lifecycle is fully internal (ADVICE r9): the candidate set
-    feeds two verify-side joins and ``flagged`` two consumers, so both
-    are persisted DURING the call — but the final ``flagged`` is then
-    materialized with an eager ``localCheckpoint`` (micro-batch-sized
-    by construction) and every intermediate persist is released before
-    returning. Callers get a checkpoint-backed ``flagged`` and a
-    ``clean`` that is one cheap anti-join over it; no
-    ``release_cache()`` contract to forget, no cache accumulation in
-    long direct-caller sessions.
+    Cache lifecycle: the batch is shingled ONCE. The (sid, shingle
+    array) table is an eager ``localCheckpoint`` and the only pass of
+    the Python shingle UDF over the batch; the MinHash signatures are
+    hashed from its explosion and melted into (sid, band, bucket) rows,
+    a second eager ``localCheckpoint``. Every later stage reads those
+    two tables: the corpus verify takes the batch's sets from the
+    shingle table and shingles only the candidate corpus docs whose ids
+    are not in the batch; the intra stage re-bands the melted rows of
+    the survivors (so ``DENSE_BUCKET_CAP`` counts survivors only) and
+    verifies against the same shingle table; the returned clean buckets
+    are the melted rows anti-joined to ``flagged``, itself an eager
+    ``localCheckpoint``. Nothing is persisted, and once ``flagged`` is
+    materialized the checkpoints that only fed it are released, so the
+    caller holds just the blocks of the returned frames (``flagged``,
+    plus the melted rows behind the clean buckets) and has no cache to
+    release; every returned frame is micro-batch-sized.
 
     The trade, stated: ``localCheckpoint`` blocks are executor-local
     and NON-RECOMPUTABLE — losing an executor between this return and
@@ -176,82 +186,65 @@ def probe_batch(
     default here (batches are small by construction)."""
     if chain_policy not in CHAIN_POLICIES:
         raise ValueError(f"chain_policy must be one of {CHAIN_POLICIES}, got {chain_policy!r}")
-    local_persists: list[DataFrame] = []
-    tracked_before = tracked_snapshot()
-
-    def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        local_persists.append(df)
-        return df
-
+    sets = batch.select(
+        F.col("doc_id").alias("sid"), word_shingles(F.col("text")).alias("sh")
+    ).localCheckpoint(eager=True)
     mb = melted_signature_buckets(
-        minhash_signatures(batch, "text", "doc_id", num_hashes, checkable=checkable),
+        shingle_signatures(
+            sets.select("sid", F.explode("sh").alias("shingle")), num_hashes, checkable
+        ),
         bands,
         num_hashes // bands,
         checkable,
-    )
-    if return_clean_buckets:
-        # the candidate join below populates the cache; the clean_mb
-        # checkpoint then reads it instead of re-running the (Python
-        # shingle UDF) signature pass a second time
-        mb = _persist(mb)
+    ).localCheckpoint(eager=True)
+    pinned = [sets] if return_clean_buckets else [sets, mb]
     # Same-id exclusion (r10 review): an UPDATED document — same
     # doc_id as its corpus entry, changed text — collides with its own
     # buckets and would be flagged as a near-dup of itself, silently
     # discarding every edit. A (batch X, corpus X) pair is an update,
     # not a duplicate; the skip stage upstream already passed it
     # through deliberately.
-    cand = _persist(
-        minhash_probe_candidates(mb, corpus_index).filter(
-            F.col("a_id") != F.col("b_id")
-        )
+    cand = minhash_probe_candidates(mb, corpus_index).filter(
+        F.col("a_id") != F.col("b_id")
     )
-    # Verification needs text on both sides, and the shingle table is
-    # keyed by id — one text per id. BATCH WINS for ids present on
-    # both sides ("the corpus as it will be after this ingest"): an
-    # updated doc's pairs verify against its NEW text on either end;
-    # without the anti-join the duplicated id would fan the verify
-    # joins out across old/new text combinations.
-    universe = batch.select("doc_id", "text").unionByName(
-        corpus_docs.select("doc_id", "text").join(
-            batch.select("doc_id"), "doc_id", "left_anti"
+    # Verification needs text on both sides, one text per id. BATCH
+    # WINS for ids present on both sides ("the corpus as it will be
+    # after this ingest"): an updated doc's pairs verify against its
+    # NEW text on either end, so only candidate corpus docs outside the
+    # batch are shingled here. The candidate id set is batch-bounded
+    # (batch buckets meet dense-collapsed index buckets), so it is
+    # broadcast: the corpus is filtered in its scan tasks, not shuffled.
+    corpus_sets = (
+        corpus_docs.join(
+            F.broadcast(cand.select(F.col("b_id").alias("doc_id"))), "doc_id", "left_semi"
         )
+        .join(batch.select("doc_id"), "doc_id", "left_anti")
+        .select(F.col("doc_id").alias("sid"), word_shingles(F.col("text")).alias("sh"))
     )
-    # eager_persists=False: per-batch frames are tiny, so the extra
-    # eager count jobs cost more than the cache race they prevent
-    # (r14 profiler A/B: +~1.2 s/batch steady p50 with eager; see
-    # operators.dedup.jaccard_verify_pairs)
-    flagged = jaccard_verify_pairs(
-        universe, cand, threshold=threshold, eager_persists=False
+    flagged = jaccard_on_sets(
+        cand, sets, sets.unionByName(corpus_sets), threshold
     ).select(
         F.col("a_id").alias("batch_id"), F.col("b_id").alias("corpus_id"), "jaccard"
     )
     if intra_batch:
-        # truncate lineage before nesting: the intra stage embeds the
-        # corpus-verify plan inside the self-join's plan on BOTH union
-        # branches, and Spark expands the shared sub-DAG to a tree —
-        # without the checkpoint the logical plan grows multiplicatively
-        # and planning itself OOMs the driver (measured: a 3-doc batch).
-        # flagged is micro-batch-sized; an eager localCheckpoint is cheap.
+        # truncate lineage before nesting: the survivor filter feeds
+        # every branch of the bucket self-join and the union below
+        # carries flagged again — without the checkpoint Spark expands
+        # the shared corpus-verify sub-DAG into each branch (a
+        # multiplicatively growing plan that once OOMed the driver in
+        # planning on a 3-doc batch)
         flagged = flagged.localCheckpoint(eager=True)
-        survivors = _persist(
-            batch.join(
-                flagged.select(F.col("batch_id").alias("doc_id")),
-                "doc_id",
-                "left_anti",
-            )
+        pinned.append(flagged)
+        survivors = mb.join(
+            flagged.select(F.col("batch_id").alias("sid")), "sid", "left_anti"
         )
-        # self-join the corpus survivors; verified pairs emit a_id <
-        # b_id, so flagging b_id keeps the lowest id (first-wins)
-        intra_pairs = minhash_neardup(
-            survivors,
-            "text",
-            "doc_id",
-            threshold=threshold,
-            num_hashes=num_hashes,
-            bands=bands,
-            checkable=checkable,
-            eager_persists=False,  # micro-batch frames: see above
+        # self-join the corpus survivors' buckets; verified pairs emit
+        # a_id < b_id, so flagging b_id keeps the lowest id (first-wins)
+        intra_pairs = jaccard_on_sets(
+            bucket_pairs(bucket_windows(survivors), DENSE_BUCKET_CAP),
+            sets,
+            sets,
+            threshold,
         )
         if chain_policy == "sequential":
             # resolve chains to the stream-equivalent greedy disposition
@@ -262,38 +255,16 @@ def probe_batch(
             F.col("b_id").alias("batch_id"), F.col("a_id").alias("corpus_id"), "jaccard"
         )
         flagged = flagged.unionByName(intra)
-    # materialize once (micro-batch-sized), then drop every
-    # intermediate persist — the returned plans depend only on the
-    # checkpointed blocks, so releasing here is safe and the caller
-    # owns nothing
     flagged = flagged.localCheckpoint(eager=True)
-    for df in local_persists:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    # nested operators (jaccard_verify_pairs' shingle table,
-    # minhash_neardup on the intra path) register their persists in the
-    # GLOBAL tracker; the checkpoint above consumed them all, so scope
-    # them to this call too instead of leaving them for a caller-side
-    # release_cache() nobody may run
-    clean_mb = None
+    # flagged is materialized, so the checkpoints only its computation
+    # read can go now: the caller holds the blocks of the returned
+    # frames alone, not three or four per call
+    for df in pinned:
+        release_checkpoint(df)
+    flagged_ids = flagged.select(F.col("batch_id").alias("doc_id")).dropDuplicates()
+    clean = batch.join(flagged_ids, "doc_id", "left_anti")
     if return_clean_buckets:
-        # filter the already-computed buckets to clean survivors and
-        # pin them BEFORE the persists are released (mb's lineage dies
-        # with them); checkpoint is batch-sized like flagged
-        clean_mb = mb.join(
-            flagged.select(F.col("batch_id").alias("sid")).dropDuplicates(),
-            "sid",
-            "left_anti",
-        ).localCheckpoint(eager=True)
-    release_tracked_except(tracked_before)
-    clean = batch.join(
-        flagged.select(F.col("batch_id").alias("doc_id")).dropDuplicates(),
-        "doc_id",
-        "left_anti",
-    )
-    if return_clean_buckets:
+        clean_mb = mb.join(flagged_ids.withColumnRenamed("doc_id", "sid"), "sid", "left_anti")
         return flagged, clean, clean_mb
     return flagged, clean
 

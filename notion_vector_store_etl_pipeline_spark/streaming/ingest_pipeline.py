@@ -87,6 +87,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.window import Window
 
 from notion_vector_store_etl_pipeline_spark.functions import vectors as V
 from notion_vector_store_etl_pipeline_spark.operators.dedup import load_lsh_index
@@ -894,16 +895,24 @@ def streaming_ingest_etl(
         # A->B->A->B oscillation must revive B's vecs from two versions
         # back.
         if prior is not None:
-            prior_scoped = prior.join(todo.select("doc_id"), "doc_id", "left_semi")
-            latest_exp = (
-                prior_scoped.groupBy("doc_id")
-                .agg(F.max(F.struct("batch_id", "vec_ids"))["vec_ids"].alias("vec_ids"))
-                .select("doc_id", F.explode("vec_ids").alias("vec_id"))
-                .dropDuplicates()
+            # one scan of the state tree for both event kinds: every
+            # prior vec_id of the todo docs, flagged when it belongs to
+            # the doc's latest version (the same max(batch_id, vec_ids)
+            # pick as the skip stage), pinned — batch-sized
+            version = F.struct("batch_id", "vec_ids")
+            exploded = (
+                prior.join(todo.select("doc_id"), "doc_id", "left_semi")
+                .withColumn(
+                    "_latest",
+                    version == F.max(version).over(Window.partitionBy("doc_id")),
+                )
+                .select("doc_id", F.explode("vec_ids").alias("vec_id"), "_latest")
+                .localCheckpoint(eager=True)
             )
-            all_exp = prior_scoped.select(
-                "doc_id", F.explode("vec_ids").alias("vec_id")
-            ).dropDuplicates()
+            latest_exp = (
+                exploded.filter("_latest").select("doc_id", "vec_id").dropDuplicates()
+            )
+            all_exp = exploded.select("doc_id", "vec_id").dropDuplicates()
             link = chunks.select("doc_id", "vec_id")
             stale = (
                 latest_exp.join(link, ["doc_id", "vec_id"], "left_anti")
